@@ -8,10 +8,6 @@ integer codepoints: every ``List(Int64|Float64)`` column is cast to
 
 Spark mapping: a vectorized Arrow Pandas UDF reproduces the exact
 chain — mask to a byte, assemble bytes, ``decode('utf-8', 'replace')``.
-A pure-JVM fast path (``decode_codepoints_expr``) is also provided for
-the common ASCII/Latin-1 case using built-in ``char`` (which is already
-mod-256, matching the wrap), usable when staying inside whole-stage
-codegen matters more than multi-byte fidelity.
 """
 
 from __future__ import annotations
@@ -35,16 +31,6 @@ def _decode_codepoints(s: pd.Series) -> pd.Series:
 def decode_codepoints_col(col: Column | str) -> Column:
     """Column expression: array<int-like> -> decoded UTF-8 string."""
     return _decode_codepoints(F.col(col) if isinstance(col, str) else col)
-
-
-def decode_codepoints_expr(col: Column | str) -> Column:
-    """JVM-only ASCII/mod-256 variant (whole-stage-codegen friendly).
-
-    ``char(x)`` is defined mod 256, matching the reference's UInt8
-    wrap for single-byte text; multi-byte UTF-8 needs the pandas UDF.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.concat_ws("", F.transform(c, lambda x: F.char(x.cast("long"))))
 
 
 _DECODABLE = (T.LongType(), T.DoubleType(), T.IntegerType(), T.FloatType(), T.ShortType())

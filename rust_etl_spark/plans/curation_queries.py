@@ -142,9 +142,10 @@ _DECON_SHINGLES_SQL = f"list_distinct({word_shingles_sql(tokens_sql('text'), DEC
     "build side (round 13: the eval broadcast WAS the wall — building/probing a "
     "5.6M-string hash relation cost ~6 s of the 10.3 s 100x total; distributing "
     "the build is 1.4x and removes the synthetic's corpus-scaling broadcast); "
-    "per-doc totals ride an explode-free in-row size() branch joined back on "
-    "doc_id (one skinny row per doc — replaced the doc_id window over the full "
-    "exploded shingle set, the query's only big shuffle, in round 10).",
+    "the per-doc total n_total is size() of the distinct-shingle array, carried "
+    "through the train-side explode_outer as one extra column (round 16: no "
+    "second scan branch, no doc_id join-back; explode_outer keeps Catalyst "
+    "from re-evaluating the shingle pipeline per row).",
 )
 def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-training-doc count of distinct n-grams that also occur in the

@@ -79,17 +79,16 @@ def get_spark(
         # partition). Cluster translation: advisory size ≈
         # (executor memory * memory fraction / cores) / ~5x row
         # expansion, rather than a constant.
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "16m"),
-        )
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
-        # events.parquet stores ts as TIMESTAMP(NANOS): read as long
-        # (nanos) and convert in the loader, as Spark has no nanos type.
+        # Fixture vintages store events.ts either as timestamp[us] or as
+        # TIMESTAMP(NANOS). Spark has no nanos type, so the nanos vintage
+        # is read as a long; sources/tables.py::normalize_event_time
+        # handles both.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Byte-small but compute-heavy tables (embeddings: 64-float
         # arrays driving O(N*C) distance folds) under-split at the

@@ -200,7 +200,8 @@ def zorder_key(a, b, bits: int = 16):
     """
     from pyspark.sql import functions as F
 
-    assert bits <= 31, "bit 31 of the b-side spread would reach the long sign bit"
+    if bits > 31:
+        raise ValueError("bit 31 of the b-side spread would reach the long sign bit")
     mask = F.lit((1 << bits) - 1).cast("long")
     sa = _morton_spread(a.cast("long").bitwiseAND(mask))
     sb = _morton_spread(b.cast("long").bitwiseAND(mask))

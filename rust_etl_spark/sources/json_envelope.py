@@ -8,13 +8,9 @@ decoding, and refuses to produce output for empty tables.
 
 Spark mapping notes:
 - ``multiLine=true`` because government-API payloads are single JSON
-  documents, not JSON-lines.
-- The reference caps schema inference at the first 1000 records
-  (processor.rs:24-27). Spark's JSON reader samples via
-  ``samplingRatio``; for an explicit record cap we do a two-pass read:
-  infer on a ``limit(infer_records)`` slice, then re-read the full
-  file with the pinned schema — same contract, and at scale it avoids
-  a full inference pass over TBs of staged JSON.
+  documents, not JSON-lines. Schema inference reads the whole
+  document; the reference's 1000-record inference cap
+  (processor.rs:24-27) is not applied.
 """
 
 from __future__ import annotations
@@ -30,32 +26,11 @@ from rust_etl_spark.operators.normalize import (
     require_nonempty,
 )
 
-INFER_RECORDS_DEFAULT = 1000  # processor.rs:24-27 infer_schema_len
 
-
-def read_json_document(
-    spark: SparkSession,
-    path: str,
-    *,
-    multiline: bool = True,
-    infer_records: int = INFER_RECORDS_DEFAULT,
-) -> DataFrame:
-    """Scan a staged JSON document with capped schema inference.
-
-    ``multiline=True`` (the envelope case) is one JSON object/array —
-    inference touches exactly one document, no cap needed. For
-    JSON-lines staging (``multiline=False``) the cap matters at scale:
-    infer the schema from the first ``infer_records`` lines only, then
-    re-read the full path with the pinned schema — the Spark analogue
-    of ``infer_schema_len(1000)``.
-    """
-    if multiline:
-        return spark.read.option("multiLine", "true").json(path)
-    if infer_records <= 0:
-        return spark.read.json(path)
-    sample = spark.read.text(path).limit(infer_records)
-    schema = spark.read.json(sample.rdd.map(lambda r: r.value)).schema
-    return spark.read.schema(schema).json(path)
+def read_json_document(spark: SparkSession, path: str) -> DataFrame:
+    """Scan a staged JSON document (one object or array) with schema
+    inference."""
+    return spark.read.option("multiLine", "true").json(path)
 
 
 def process_json_document(
@@ -64,7 +39,6 @@ def process_json_document(
     *,
     root_path: str | None = None,
     technical_columns: tuple[str, ...] = TECHNICAL_COLUMNS,
-    infer_records: int = INFER_RECORDS_DEFAULT,
 ) -> DataFrame:
     """The full processor.rs transform chain as one declarative plan:
 
@@ -73,7 +47,7 @@ def process_json_document(
     arrays. Caller writes the result (sink stays separate so the same
     transform serves batch files, streams, and tests).
     """
-    df = read_json_document(spark, path, infer_records=infer_records)
+    df = read_json_document(spark, path)
     if df.columns == ["_corrupt_record"]:
         # Unparseable JSON: the reader produced only the corrupt-record
         # column (parity: reference JsonReader error -> ProcessorError).

@@ -1,9 +1,7 @@
-"""Idle re-measure adjudication, as a machine-readable artifact
-(round-15 VERDICT #1/#2: driver-window bench noise was being
-adjudicated in SCALING.md prose — "idle re-measures reverted to the
-r13 band" — with the idle values living nowhere a future round can
-diff against; the repo's own STREAM_BENCH lesson is to generate the
-watch notes FROM committed rows).
+"""Idle re-measure of cross-round bench movers, as a machine-readable
+artifact. SCALING.md's mover table already separates plan changes
+from window noise by scale-audit counters; this re-measure is for
+the case counters cannot see — a change inside a UDF or kernel body.
 
 Picks the biggest calibrated per-query movers between two committed
 bench records (default: the two highest-numbered BENCH_r*.json),

@@ -1,11 +1,27 @@
-"""Measured scaling curve: sf0.1 vs the generated 10x tier.
+"""Measured scaling curve: sf0.1 vs the generated tiers, rendered from records.
 
-Reads the bench records (BENCH_sf0.1.json / BENCH_gen_sf1.json — full
-per-query records as written by bench.py's BENCH_LOCAL.json, renamed)
-and the scale-audit JSONs (SCALE_AUDIT.json / SCALE_AUDIT_gen_sf1.json)
-and writes SCALING.md: per-query wall-time and shuffle-byte ratios at
-10x the rows. Near-linear means wall ratio <= ~12x and shuffle ratio
-<= ~12x; anything above is flagged as the re-plan work queue.
+Reads the bench records (BENCH_sf0.1.json / BENCH_gen_sf*.json — full
+per-query records as written by bench.py's BENCH_LOCAL.json, renamed),
+the scale-audit JSONs (SCALE_AUDIT.json / SCALE_AUDIT_gen_sf*.json),
+the optional measurement records (BUCKETED_BENCH, RANGE_JOIN_REGIMES,
+MISBROADCAST_AUDIT, CURATION_BENCH, STREAM_BENCH, DEC38_BENCH,
+IDLE_REMEASURES) and the previous git versions of the gen-tier records,
+and writes SCALING.md. Every value in it is computed from those
+records; tests/test_scaling_report_render.py fails when the committed
+SCALING.md differs from ``render()``.
+
+Flags: at 10x the rows, near-linear means wall ratio <= ~12x and
+shuffle ratio <= ~12x; anything above (or any spill) is flagged, and
+the flagged queries' shuffle write is printed at every audited tier.
+
+Cross-round movers: a query whose calibrated wall moved more than
+``MOVER_RATIO`` either way against the previous git version of its
+tier record is labelled by its scale-audit counters at the same two
+commits. Equal stages and shuffle write mean the same plan did the
+same work, so the move is the measurement window; a counter change is
+a plan change. Blind spot: a change inside a UDF or kernel body can
+slow a query without moving any counter — for that case re-measure
+the query with ``python scripts/idle_remeasure.py``.
 
 Run after:
     python scripts/gen_scale_tier.py
@@ -16,15 +32,16 @@ Run after:
     python scripts/scale_audit.py
     SPARK_GRAFT_SF_DIR=/root/repo/gen_sf1 python scripts/scale_audit.py
     python scripts/scaling_report.py
+(`bash scripts/regen_scale_evidence.sh` runs the whole chain.)
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SCALE_FACTOR = 10.0
 WALL_FLAG = 12.0  #: wall ratio above this at 10x rows = super-linear
 SHUFFLE_FLAG = 12.0
 #: a shuffle-ratio flag needs materiality: kilobyte-scale top-k merges
@@ -32,515 +49,12 @@ SHUFFLE_FLAG = 12.0
 #: sets) while staying irrelevant; only flag when the 10x tier moves
 #: real bytes.
 SHUFFLE_FLOOR_MB = 5.0
-
-#: Investigated flags that are measurement artifacts, not defects: the
-#: note must cite evidence (plan-shape comparison, absolute asymptote).
-#: A flagged query WITHOUT a note is the open re-plan queue.
-FLAG_NOTES = {
-    "q18_large_volume": (
-        "identical plan at both tiers (2 BHJ, 3 Exchange; verified via "
-        "executedPlan); the shuffle is the l_orderkey partial-aggregate "
-        "output, and at sf0.1 a handful of mappers see the key-clustered "
-        "lineitem once each so map-side combine collapses to near the "
-        "key count — an under-counting baseline. The 10x tier's 28 MB "
-        "is 0.24x its input: the linear asymptote."
-    ),
-    "q10_returned_items": (
-        "round-13 re-plan aggregates BEFORE joining (order grain ahead "
-        "of the orderkey join, customer grain ahead of the customer "
-        "join — 6.63 -> 4.05 s at 100x); the remaining shuffles are "
-        "the per-order partial-aggregate output and the orderkey join, "
-        "both linear in rows, and the custkey exchange is one skinny "
-        "row per customer. Same partial-agg-efficacy baseline artifact "
-        "as q18 at the small tier."
-    ),
-    "events_rolling_distinct": (
-        "identical plan at both tiers (5 Exchange); 8.9 MB at 10x is "
-        "~0.55x the events input — the sliding-window distinct state, "
-        "linear; the 14x ratio comes from a sub-linear sf0.1 baseline."
-    ),
-    "q3_shipping_priority": (
-        "the round-15 dims-first re-plan (semi-prune orders by the "
-        "BUILDING segment before the fact exchange, pre-aggregate "
-        "lineitem per orderkey) cut the 100x shuffle 601 -> 197 MB "
-        "(3.1x); the flagged ratio is the q18 small-tier baseline "
-        "artifact — at sf0.1 map-side combine on the key-clustered "
-        "lineitem collapses the per-order partial-agg output to near "
-        "the key count (1.6 MB), while across the gen tiers growth is "
-        "linear in rows (11.7 -> 29.9 -> 62.8 -> 196.6 MB for "
-        "3/10/30/100x). Zero spill at every tier; the 100 TB answer "
-        "for the remaining orderkey exchange is the bucketed layout "
-        "(BUCKETED_BENCH.json)."
-    ),
-    "join_star": (
-        "same round-15 re-plan family and same small-tier baseline "
-        "artifact as q3: the ASIA restriction now flows dims-first so "
-        "orders is pruned ~5x before any fact exchange, and lineitem "
-        "partially aggregates per orderkey ahead of its only exchange "
-        "— 100x shuffle 1009 -> 376 MB (2.7x), wall 8.18 -> 5.06 s in "
-        "the audit context. Gen-tier growth 20.4 -> 47.9 -> 90.6 -> "
-        "375.7 MB for 3/10/30/100x tracks rows (the last step adds "
-        "the orders<->customer broadcast-threshold crossover, the "
-        "adjudicated self-correcting family); sf0.1's 2.1 MB baseline "
-        "under-counts for the same map-side-combine reason. Zero "
-        "spill; forced-broadcast exposure removed (the per-order side "
-        "is hinted shuffle_hash, plan-locked)."
-    ),
-}
-
-#: Investigation notes for each extra tier's "worst single query" line
-#: (VERDICT r9 #2: the 10x flag notes had this discipline; the other
-#: tiers' worst queries were named but never investigated). Keyed by
-#: (tier label, query); rendered under the tier line.
-MID_TIER_WORST_NOTES = {
-    ("3x", "q13_customer_distribution"): (
-        "2.7x wall for 3x rows — sub-linear; worst at this tier only "
-        "because everything else is flatter. Plan previously "
-        "adjudicated in the q3 crossover family note (dim joins step "
-        "across the broadcast threshold; wall <= 2.5-2.7x for 3.3x "
-        "rows, zero spill). Closed."
-    ),
-    ("100x", "fuzzy_blocked_match"): (
-        "9.8x wall for 100x rows — sub-linear, same query and same "
-        "mechanism as the 30x note below: the scale-aware "
-        "fuzzy_block_len key (L=4 at this tier) holds block occupancy "
-        "while the corpus grows 100x. Closed."
-    ),
-    ("3x", "fuzzy_blocked_match"): (
-        "1.8x wall for 3x rows — sub-linear; worst at this tier only "
-        "because everything else is flatter (fixed-overhead-dominated "
-        "sub-second baselines). Same query carries the 30x note below "
-        "(the L=3 -> 4 block-key step). Closed."
-    ),
-    ("100x", "events_ewma"): (
-        "18.6x wall for 100x rows on the chain record — the cold-page-"
-        "cache artifact, diagnosed to mechanism this round (see the "
-        "events_ewma watch-list entry above): idle 11.2 s reproduces "
-        "at a healthy CPU anchor, one sequential warm scan of "
-        "events.parquet drops it to 3.19 s = 2.9x for 100x rows, "
-        "sub-linear. The plan is untouched integer-weight window "
-        "folds; the record stays as measured because the chain cannot "
-        "control what the host evicts. Closed (mechanism identified, "
-        "warm-cache value sub-linear)."
-    ),
-    ("100x", "decontaminate"): (
-        "round-13 worst-query profiling attributed the 9-10 s wall to "
-        "the eval-shingle BROADCAST (5.6M distinct strings — the "
-        "synthetic's doc_id%4 eval split scales with the corpus — "
-        "collected, hash-built once, probed 18.7M times), NOT the "
-        "tokenize passes (ev 2.2 s + n_total 1.5 s + bare explode "
-        "1.6 s of the total); the eval join is now shuffle_hash with "
-        "ev as per-task build: committed chain record 6.06 s "
-        "(min-of-3, spread 1.3) vs 9.16 in r12 — 1.5x. The "
-        "distributed build trades the old plan's CPU-bound steadiness "
-        "for a ~1 GB shuffle write, which EXPOSES the query to this "
-        "VM's intermittent host-I/O windows: 9 idle runs measured "
-        "[5.5-6.6] steady with spikes to 10-21 s, and one chain slot "
-        "recorded a sustained window (21.2 s min-of-3, spread 10.5) "
-        "that the >50%-regression protocol re-ran to the clean value. "
-        "On a cluster the shuffle crosses dedicated disks/network and "
-        "the broadcast alternative is a driver OOM, so the shuffle "
-        "plan is still the right 100 TB posture. exceptAll = 0, no "
-        "BroadcastHashJoin left in the plan (lock tightened). "
-        "Rejected by measurement: single-pass left-join form (13.9 s), "
-        "xxhash64/md5 pre-hash keys. Documented lever for a "
-        "genuinely-bounded eval side: runtime bloom filter (5.19 s, "
-        "77% of train shingle rows miss) — a session conf. The "
-        "round-10 window->in-row-size() trade remains as shipped "
-        "(495 MB shuffle eliminated). Closed (re-planned, measured)."
-    ),
-    ("3x", "pii_pseudonymize"): (
-        "2.2x wall for 3x rows — SUB-linear; worst only because every "
-        "other query at this tier is flatter (fixed-overhead-dominated "
-        "sub-second baselines). At 30x the same query is 1.1x. Closed."
-    ),
-    ("30x", "fuzzy_blocked_match"): (
-        "6.6-6.9x wall across rounds for 30x rows — sub-linear, and this tier is where "
-        "`fuzzy_block_len` steps L=3 -> 4 so block occupancy resets; "
-        "the scale-aware key is doing its job. Closed."
-    ),
-    ("100x", "events_range_join"): (
-        "20.2x wall for 100x rows — sub-linear endpoint-to-endpoint, "
-        "and the endpoint ratio overstates it: the sf0.1 baseline is "
-        "sub-second fixed-overhead. Round 10 flipped the two-bucket "
-        "candidate expansion from the FOLLOW side (2N generated rows — "
-        "the 100 TB side) onto the filtered SIGNUP side (exact integer "
-        "semantics, value parity verified; 15.4 -> 4.9 s at 100x). "
-        "Round 11 then MEASURED the join-regime story the round-10 "
-        "note only asserted, and found the assertion's premise wrong: "
-        "the unhinted BroadcastHashJoin was building the FOLLOW-side "
-        "projection (BuildRight in the executedPlan — the side that "
-        "grows with the corpus; the note claimed the signup side "
-        "broadcast), a single-threaded ~20M-row hash build costing "
-        "5.34 s min-of-3 at 100x. The shipped form now hints "
-        "shuffle_hash on the signup side — 1.70 s, with the spill-safe "
-        "SortMergeJoin fallback measured at par (1.74 s, identical "
-        "212 MB shuffle) — see the dedicated regime section below. "
-        "Closed (re-planned twice, both measured)."
-    ),
-}
-
-#: Watch list: queries BELOW the flag thresholds whose tier ratio moved
-#: between rounds and was re-measured; the note records the evidence so
-#: the next drift is judged against a quiet-machine anchor, not a noisy
-#: bench round.
-#: Round-10 closure of the five r9-bench regressions (+20-28% raw on
-#: plans untouched since round 6): quiet min-of-5 re-measure on a
-#: sandbox whose CPU anchor was 1.26x SLOWER than r8's (1.128 vs
-#: 0.955 s) — all five still measured faster than BOTH r8 and r9 raw.
-_R10_NOISE_CLOSURE = (
-    "r9 bench +{pct}% on an untouched plan; round-10 quiet min-of-5 "
-    "re-measure: {q:.3f} s vs r8 {r8:.3f} / r9 {r9:.3f} at CPU anchor "
-    "1.128 s (vs r8's 0.955) — faster than both rounds raw on a slower "
-    "sandbox; the r9 delta does not reproduce. Closed as the documented "
-    "driver-bench noise family."
-)
-WATCH_NOTES = {
-    "r16_optimization_chain": (
-        "the round-16 chain ran on the final-optimization-round HEAD "
-        "(4 re-plans + the co-bucketed events/orders layout; "
-        "OPTIMIZATION_r16.md). gen_sf10: headline 40.63 -> 34.70 s, "
-        "extended 87.18 -> 75.06 s at par anchors (1.011/0.977); the "
-        "re-planned queries landed at their A/B-predicted values "
-        "(q21 7.25 -> 6.03, events_asof_join 2.61 -> 2.05, "
-        "decontaminate 5.55 -> 3.21). Chain movers adjudicated idle "
-        "(IDLE_REMEASURES.json): events_retention +47% idles at 0.95x "
-        "(noise, spread 3.7 in the chain slot), events_zscore +16% at "
-        "1.04x (noise), events_rolling_distinct +24% CONFIRMED at "
-        "2.84 s (spread 0.11) — the deliberate bytes-for-local-CPU "
-        "trade of its sweep-line re-plan (229.1 -> 7.1 MB shuffle; "
-        "collect_set is non-codegen where the retired fan-out was "
-        "all-codegen; see the query docstring). The chain's sf0.1 "
-        "bench slot landed in a contended window (15.89 s headline, "
-        "uniformly 1.3-1.7x on untouched sub-second queries at PAR "
-        "start/end CPU anchors — the anchor pair catches CPU "
-        "contention, not this VM's I/O/scheduler windows); re-run "
-        "verified-quiet per the round-11 doctrine: 13.198 s headline "
-        "/ 27.733 s extended at anchors 0.985/0.987, and the "
-        "committed sf0.1 record IS the quiet run. gen_sf0.3 (the "
-        "overhead-dominated smallest tier, the r14 window-family "
-        "precedent) carries three elevated sub-second movers on "
-        "untouched code (q16 0.45 -> 0.81, pca 0.63 -> 0.95); idle "
-        "re-measures swing 0.55-0.97 with spreads comparable to the "
-        "deltas, pca reads PAR (0.629) in a later quiet run, and a "
-        "full stage re-run was itself flagged by the new start/end "
-        "anchor pair (1.193 -> 0.994: contended start) so the chain "
-        "record — whose own anchor pair is healthy (1.001/1.002) — "
-        "stays committed; big tiers are par on the same code "
-        "(gen_sf3 1.019x, gen_sf10 headline calibrated 0.885x). "
-        "events_rolling_distinct's small-tier +18-27% is its "
-        "documented bytes-for-CPU trade, not noise."
-    ),
-    "r15_optimization_chain": (
-        "the third round-15 chain ran on the optimization-round HEAD "
-        "(7 re-plans + 5 expression/kernel swaps; OPTIMIZATION_r15.md) "
-        "after a sandbox reset regenerated every gen tier from the "
-        "same seed. sf0.1: headline 14.818 -> 12.432 s, extended "
-        "24.412 s, at the IDENTICAL anchor 0.992 — zero >1.5x "
-        "untouched movers. gen_sf10: headline 43.49 -> 40.63 s, "
-        "extended 95.32 -> 87.18 s at par anchors (1.01/1.011); the "
-        "optimized queries landed at their A/B-predicted values "
-        "(events_ewma 8.82 -> 1.63, dedup_simhash 3.90 -> 1.95, "
-        "similarity_ann_lsh 2.92 -> 1.64, zorder_order 2.67 -> 0.83, "
-        "q9 3.48 -> 2.56, doc_winnow audit 10.3 -> ~3.4). ONE >1.5x "
-        "untouched mover: groupby_agg 1.165 -> 1.802 (spread-prone "
-        "sub-2s query); idle re-measure (IDLE_REMEASURES.json third "
-        "record, min-of-5 warm, spread 0.479) reads 1.257 s = 1.05x "
-        "calibrated vs the r15b base — chain-window noise, closed. "
-        "Deep misbroadcast audit re-run on this HEAD: 0 raw across "
-        "all 87; the dedup_segments and dedup_embedding_lsh reduced "
-        "flags RETIRED (their re-plans have no joins left to "
-        "broadcast)."
-    ),
-    "r15_second_chain": (
-        "the second round-15 chain (run after the join_star/q3/"
-        "events_retention shuffle re-plans) landed with the in-chain "
-        "window family active: its sf0.1 record read 16.42 s headline "
-        "at the SAME anchor as r15a's 14.825 with a broad 1.1-1.35x "
-        "elevation on untouched sub-second queries — re-run quiet "
-        "immediately after, it came back at 14.818 s / anchor 0.992 "
-        "(par with r15a), and the committed sf0.1 record IS the quiet "
-        "run. gen_sf10 read +0.2-0.6 s on ~8 untouched plans; a quiet "
-        "re-run there came back SLOWER still (46.8 s headline at par "
-        "anchor — host-window drift the CPU anchor does not capture), "
-        "so the chain record was kept and the movers adjudicated idle "
-        "instead (IDLE_REMEASURES.json second record, r15a base vs "
-        "r15b cur): every untouched mover idles at 0.86-1.00x of "
-        "r15a (dedup_simhash 1.004x, similarity_ann_lsh 0.952x, "
-        "window_range_frame 0.855x, events_asof_join 0.969x, "
-        "dedup_ngram_jaccard 0.965x) — window noise, no plan changed. "
-        "The re-planned queries: events_retention idles 0.272x "
-        "(3.10 -> 0.87 s, shuffle 119 -> 8 MB), join_star 0.624x "
-        "(4.79 -> 3.10 s, shuffle 1009 -> 376 MB), q3 1.036x — PAR on "
-        "local wall (interleaved old-vs-new min 2.995 vs 2.867 over 5 "
-        "pairs); its re-plan win is the 3.1x shuffle cut (601 -> 197 "
-        "MB) plus removing the forced corpus-scaling broadcast, which "
-        "is the 100 TB argument, not the local[32] one."
-    ),
-    "r15_rebaseline": (
-        "the round-15 chain re-baselined the two records VERDICT r14 #1 "
-        "named: gen_sf0.3 reads 0.854x headline / 0.860x extended "
-        "calibrated vs its elevated r14 version (the 1.178x/1.206x "
-        "elevation was the measurement window, now reverted in the "
-        "committed record itself) and gen_sf10 reads 0.987x/1.048x. "
-        "gen_sf1's 1.123x headline line is an ANCHOR artifact, not a "
-        "slowdown: its r14 version was recorded at anchor 1.13 (a slow "
-        "CPU window) and the raw headline got FASTER (15.193 -> 14.569 "
-        "s) — dividing by a 17% faster anchor manufactures the ratio. "
-        "The driver-window mover question (VERDICT r14 #2) is settled "
-        "by the committed IDLE_REMEASURES.json: all 10 biggest r14 "
-        "movers sit 0.69-1.11x of the r14 chain record when idle, and "
-        "repeated idle runs minutes apart swing sub-second fixture "
-        "queries up to ~1.7x (events_seasonal_decompose 0.68 -> 0.40 s "
-        "across three runs) — chain records, not driver-window values, "
-        "are the diff baseline. bench.py now pre-warms the page cache "
-        "itself so the driver's post-close run stops paying cold-read "
-        "variance into BENCH_r*.json. The r15 chain's own gen_sf10 "
-        "movers were spot re-measured idle (warm, pre-pass, anchor "
-        "0.995) immediately after: ngram_counts 4.77 in-chain -> 1.74 "
-        "idle (r14 band 1.63), events_retention 3.10 -> 1.28 (band "
-        "1.15), q5_local_supplier 2.81 -> 2.60 — all chain-window "
-        "noise on untouched plans, closed."
-    ),
-    "r14_chain_movers": (
-        "the round-14 chain landed clean at the big tiers (gen_sf10 "
-        "headline 0.996x calibrated vs r13, zero per-query regressions "
-        "above 1.4x — the only large movers are IMPROVEMENTS: "
-        "text_tfidf 9.02 -> 3.84 s, settling into the idle ~4 s band "
-        "its r13 adjudication predicted, and similarity_topk 3.21 -> "
-        "0.52 s, a prior cold slot). The gen_sf0.3 record elevated "
-        "1.178x calibrated with six 1.5-2.6x sub-second movers on "
-        "untouched plans (join_star 0.91 -> 2.30 the largest); all "
-        "six idle re-measured with the warm-scan protocol immediately "
-        "after the chain and reverted to AT OR BELOW their r13 values "
-        "(join_star 0.62, q16 0.46, agg_filter_sum 0.11, q2 0.56, "
-        "q13 0.36, lm_quality 0.39 min-of-4) — the in-chain window "
-        "family at the fixed-overhead-dominated small tier; no plan "
-        "changed, none re-planned."
-    ),
-    "decontaminate_bloom_lever_r14": (
-        "the round-13 docstring left a dangling lever: 5.19 s measured "
-        "with the runtime bloom filter vs the shipped 7.58. Round 14 "
-        "adjudicated it with an interleaved A/B (5 warm reps each, "
-        "alternating confs so host noise cancels; "
-        "BloomFilterMightContain verified present in the ON plan): "
-        "bloom ON 4.59 s min / OFF 4.64 s min at gen_sf10 — "
-        "indistinguishable, and the shipped shuffle_hash plan itself "
-        "now idles at ~4.6-5.4 s (better than the 6.06 s committed "
-        "chain record; the 5.19-vs-7.58 spread was chain-window "
-        "noise). Decision: conf stays default — making injection fire "
-        "requires applicationSideScanSizeThreshold=0, which would add "
-        "creation-side aggregates to every shuffle join globally for "
-        "a measured ~0 gain on the one query it targeted."
-    ),
-    "dedup_ngram_jaccard_r14_adjudication": (
-        "round 14 gave the largest steady plan-attributable extended "
-        "wall (6.3-6.6 s idle at gen_sf10) the worst-query treatment "
-        "(scripts/ngram_jaccard_profile.py). Subtree attribution: the "
-        "shingle pipeline computes 2.4 s (scan 0.27, +tokenize 0.47, "
-        "+shingle fold 1.54, +md5 2.20, +explode 2.42 — md5 is the "
-        "oracle-portability cost, the rest is codegen string work), "
-        "and everything downstream of the df-cap is trivial (71,835 "
-        "of 18.7M exploded rows survive; members 2.7k lists, pairs "
-        "969k) — the residual ~3.5 s is ONE 18.7M-row/240 MB exchange "
-        "plus the window sort on sh. Two alternatives were measured "
-        "and REJECTED: (a) groupBy(sh).count + join-back runs 10.1 s "
-        "vs 5.4-7.0 s — map-side partial aggregation makes the two "
-        "exchanges non-identical, ReuseExchange never fires, and the "
-        "whole shingle pipeline evaluates twice; (b) a single "
-        "groupBy(sh) collecting doc lists and df together would hold "
-        "UNBOUNDED per-group state on hot shingles (max df ~ corpus "
-        "size) — the sort-based window spills gracefully where that "
-        "hash-agg OOMs, which is exactly why the current shape is the "
-        "100 TB-safe one. Verdict: plan is right; the wall is "
-        "irreducible compute + one spill-safe exchange."
-    ),
-    "window_range_frame_r12_replan": (
-        "round 12 gave the extended set's largest 100x wall (7.42-7.82 "
-        "s idle) the worst-query treatment and RE-PLANNED it: profiling "
-        "showed the cost was the per-ORDER endpoint explode (2N = 30M "
-        "rows through the bucket window) plus a 2N-row groupBy over an "
-        "N-key domain — while distinct prices are only 149,743 at "
-        "gen_sf10 (1% of rows; cent-quantized bounded domain). The "
-        "identical two-level prefix-sum machinery now runs per DISTINCT "
-        "price and order rows resolve by one equi-join on the exact "
-        "price double: 7.42 -> 2.81 s min-of-3 warm at gen_sf10, output "
-        "verified EXACTLY equal (exceptAll both directions = 0 over all "
-        "15M rows). The join-back is shuffle_hash-hinted building the "
-        "per-price side: unhinted, the new gate-resident misbroadcast "
-        "canary caught Catalyst broadcasting the pruned ORDERS "
-        "projection (the corpus-scaling side — the round-11 pathology, "
-        "caught this time at pytest cost before the code ever reached a "
-        "snapshot). The round-12 chain recorded 5.61 s (min-of-3 spread "
-        "2.38 — in-chain cold-cache runs of [~6-8, ~3] shape); idle "
-        "warm-scan re-measure immediately after: 3.08 s min-of-3 "
-        "([6.21, 3.27, 3.08]), consistent with the pre-chain 2.81. "
-        "Compare future rounds against ~2.8-3.1 s idle, not the "
-        "chain-window record."
-    ),
-    "q21_r12_replan": (
-        "round 12's second worst-query treatment: q21's decorrelated "
-        "groupBy-then-join-back form was executing the entire "
-        "lineitem-join-orders-aggregate subtree TWICE (the self-join "
-        "branches carry distinct expression IDs, defeating "
-        "ReusedExchange — verified in the executed plan: two lineitem "
-        "scans, two join exchanges, two (order,supplier) aggregates). "
-        "Replaced the join-back with count/sum windows over "
-        "l_orderkey computed on the clustering the join exchange "
-        "already provides (local sort only, no new exchange, "
-        "self-join gone): same-session old-vs-new at gen_sf10 11.41 "
-        "-> 6.37 s min-of-4 warm, outputs exactly equal (exceptAll "
-        "= 0). Not a no-window-argmin violation: the window input is "
-        "the post-aggregate grain, partition key bounded (suppliers "
-        "per order), and it REMOVES a shuffle join."
-    ),
-    "dedup_minhash_verified_r12": (
-        "round-12 chain recorded 2.50 -> 4.43 s at gen_sf10 on code "
-        "untouched since the round-11 hints (min-of-3 spread 1.48 — "
-        "the noise is in the record itself); idle re-measure "
-        "immediately after, documents warm-scanned first: 2.68 s "
-        "min-of-3 ([7.32, 3.06, 2.68] — the first run shows the cold "
-        "start the chain paid on all three). Closed as the "
-        "cold-page-cache family (the events_ewma mechanism); plan "
-        "unchanged, no re-plan warranted."
-    ),
-    "r12_second_chain_movers": (
-        "the second round-12 chain (q16/q5/IVF-kernel regen) ran "
-        "into the SAME host pattern: anchor 0.88 -> 0.992 across "
-        "chains, and a VM-external load spike right after (load avg "
-        "9-14 with zero VM processes; anchor 1.09-1.49 before "
-        "settling at ~1.0-1.1). Untouched-code movers at gen_sf10, "
-        "each idle re-measured with the warm-scan + NOOP-action "
-        "protocol (an early re-measure mistake worth recording: "
-        ".collect() is NOT the bench action — for wide-output "
-        "queries like events_json_extract it times driver "
-        "materialization and reads 2-4x high): kmeans_iterate chain "
-        "5.63 vs idle 2.99 min-of-4 ([24.2, 4.1, 3.5, 3.0] — "
-        "anchor-adjusted this IS the post-swap ~2.3 s value); "
-        "events_json_extract chain 7.55 vs idle-noop 3.86 "
-        "([16.7, 14.9, 5.3, 3.9] — the non-self-warming descent "
-        "signature); events_range_join chain 2.76 vs idle-noop 1.91 "
-        "([5.71, 3.81, 1.91, 1.93] — anchor-adjusted ~1.7, exactly "
-        "the round-11 RANGE_JOIN_REGIMES value); q21 chain 7.42 at "
-        "anchor 0.992 vs 6.37 same-session at the healthier morning "
-        "window — consistent, no action. All closed as the "
-        "cold-cache/host-window families; no plan changed for any "
-        "of them this chain."
-    ),
-    "r13_chains": (
-        "round 13 ran the chain twice (first on the round()-based "
-        "money quantization, then on the floor-form fix it exposed — "
-        "q1 0.92 -> 2.04 s and groupby_agg 1.11 -> 2.34 s at 100x "
-        "from Spark's per-row BigDecimal round(double); floor form "
-        "restored 1.17/1.65). The warm() pre-stage WORKED: the "
-        "standing cold-cache movers stayed in their idle bands "
-        "in-chain for the first time (events_ewma 4.3-5.2 chain vs "
-        "its old 9.9-14.2 cold records; no post-chain re-adjudication "
-        "needed for that family). First-chain dedup-family elevation "
-        "(minhash_lsh 3.81 / verified 4.86 / ngram 9.22 vs r12's "
-        "2.2/2.9/6.0) idle re-measured immediately after at 2.67 / "
-        "2.78 / 6.51 — in-chain CPU/IO contention, not plans (none "
-        "touched); second chain confirmed in-chain (2.75 / 2.35 / "
-        "6.61). One genuine outlier: the second chain's decontaminate "
-        "slot hit a sustained host-I/O window (21.2 s min-of-3, "
-        "spread 10.5, on a query whose re-plan now writes a ~1 GB "
-        "shuffle); 9 idle runs read [5.5-6.6] steady with "
-        "intermittent 10-21 s spikes, and the >50%-regression "
-        "protocol re-ran the tier bench to the clean committed "
-        "record (6.06 s, spread 1.3). text_tfidf, the record's "
-        "nominal tier-worst (9.02, spread 4.8; r12 committed 4.20 at "
-        "spread 7.3), idle re-measures at [11.0, 4.9, 4.2, 4.1, 3.9] "
-        "— steady ~4 s with a first-run JIT/vocab-broadcast cold "
-        "start, the same in-chain window family; plan untouched "
-        "since its Heaps-law vocabulary adjudication. Extended total "
-        "101.1 -> 86.2 s r12 -> r13 at par anchors (0.972/0.982)."
-    ),
-    "r12_third_chain_movers": (
-        "the third round-12 chain (events_json_extract regen, anchor "
-        "0.972 — par with the second's 0.992) confirmed the two "
-        "prior adjudications in-chain (events_json_extract 7.55 -> "
-        "2.77 after the from_json re-plan; kmeans_iterate 5.63 -> "
-        "2.10, the numpy-kernel value the second chain's host window "
-        "had masked) and produced three movers, each idle "
-        "warm-scan re-measured at anchor 0.999: events_ewma 9.96 "
-        "chain / 3.79 idle min-of-3 — the permanent cold-cache "
-        "note's exact oscillation; q10_returned_items 6.94 / 5.06 — "
-        "back to the prior chain's value; window_range_frame 3.33 "
-        "(spread 9.8, first-run cold) / 3.27 idle — at its "
-        "post-re-plan ~2.8-3.3 band. All closed; extended total "
-        "108.6 -> 101.1 s across the two chains."
-    ),
-    "window_range_frame_chain3": (
-        "the round-11 third chain (the PQ-swap regen) ran in a "
-        "HOST-DEGRADED window — CPU anchor 1.257 s vs the same day's "
-        "0.89-0.93 — and recorded four untouched-code >50% movers at "
-        "gen_sf10 (window_range_frame 6.55 -> 10.17, "
-        "events_interval_merge 1.37 -> 3.95, events_anomaly_mad 0.51 "
-        "-> 1.40, events_seasonal_decompose 0.59 -> 0.96 vs the "
-        "second chain hours earlier). Idle re-measure immediately "
-        "after, warm-scan protocol, anchor 1.048: 7.82 / 2.15 / 1.08 "
-        "/ 1.01 — all revert most of the way on plans git-verifiably "
-        "untouched since the second chain. The residual sits inside "
-        "the anchor gap (the host was still ~15% slow at re-measure "
-        "time). Closed as the host-window family; the PQ deltas "
-        "shipped this chain (11.89 -> 0.64, 12.14 -> 0.99) dwarf it "
-        "and survive any anchor correction."
-    ),
-    "events_ewma": (
-        "the recurring 'host I/O contention' query got a MECHANISM in "
-        "round 11: the second-chain gen_sf10 record (12.4 s, vs 4.65 "
-        "in that round's first chain) REPRODUCED idle (11.2 s min-of-3 "
-        "at a healthy 0.887 CPU anchor, buff/cache down to 4 GB of "
-        "125) — then one sequential warming scan of events.parquet "
-        "dropped it to 3.19 s (the historical idle value; the query's "
-        "own runs do NOT self-warm: [16.3, 11.7, 11.2] across three "
-        "noop re-scans). Cold-page-cache column-pruned parquet reads "
-        "are seeky and ~3.5x slower than warm on this VM's storage; "
-        "whether a chain query lands warm depends on what ran before "
-        "it, which is why the family oscillates 3-4 s vs 12-16 s "
-        "across rounds with tight per-run spreads. The CPU anchor "
-        "cannot catch it (I/O, not CPU); treat any ewma-class delta "
-        "as cache state unless it survives an explicit warm scan."
-    ),
-    "pii_pseudonymize": (
-        "investigated round 9 as the 3x tier's worst single query and "
-        "closed as sub-linear vs rows: 2.2-2.3x wall for 3x rows with "
-        "ZERO shuffle at every tier (map-side keyed-hash projection), "
-        "worst at 3x only because every other query there is flatter "
-        "(fixed-overhead-dominated sub-second baselines); at 30x the "
-        "same query is ~1.1x. Recorded here permanently because the "
-        "3x worst-query slot rotates between rounds and the closure "
-        "note must not rotate out with it (VERDICT r10 #4)."
-    ),
-    "sort_topk": _R10_NOISE_CLOSURE.format(pct=28, q=0.121, r8=0.187, r9=0.240),
-    "window_rank": _R10_NOISE_CLOSURE.format(pct=26, q=0.168, r8=0.242, r9=0.306),
-    "text_stats": _R10_NOISE_CLOSURE.format(pct=25, q=0.235, r8=0.296, r9=0.370),
-    "join_star": _R10_NOISE_CLOSURE.format(pct=23, q=0.435, r8=1.052, r9=1.292),
-    "dedup_minhash_lsh": _R10_NOISE_CLOSURE.format(pct=21, q=0.526, r8=0.951, r9=1.152),
-    "q10_returned_items": (
-        "round-10 regen chain recorded 5.83 -> 19.78 s at gen_sf10 on "
-        "untouched code with BYTE-IDENTICAL shuffle (736.48 MB both "
-        "rounds — same plan, same work); idle min-of-3 immediately "
-        "after: 4.78 s, faster than r9. Chain-window host I/O "
-        "contention (same signature as events_ewma, re-measured idle "
-        "at 4.11 s this round vs 13.6 in-chain). Closed."
-    ),
-    "struct_unnest": (
-        "round-10 regen chain recorded 1.398 -> 2.107 s at gen_sf10 "
-        "(1.51x, exactly at the >50% re-run threshold) on untouched "
-        "code; idle min-of-4 re-measure immediately after: 1.351 s — "
-        "the chain window's host I/O contention (the CLAUDE.md "
-        "events_ewma precedent), not the plan. Closed."
-    ),
-    "window_range_frame": (
-        "round 7's regenerated bench showed 2.87 s -> 5.054 s at gen_sf1 "
-        "(10x-rows ratio 4.2x, up from 2.6x); quiet-machine min-of-5 "
-        "re-measurement round 8: sf0.1 1.247 s, gen_sf1 2.144 s = 1.7x — "
-        "the 4.2x was the round-7 sandbox slowdown (uniform ~1.23x, see "
-        "calibration note), not the plan; two-level prefix-sum plan "
-        "unchanged, no single-partition stage."
-    ),
-}
+#: calibrated cross-round wall ratio (either direction) that lists a
+#: query in the mover table
+MOVER_RATIO = 1.2
+#: scale-audit counters that identify the work a plan did; both are
+#: exactly reproducible run to run, unlike wall or executor CPU time
+MOVER_COUNTERS = ("stages", "shuffle_write_mb")
 
 
 def _load(name: str) -> dict | None:
@@ -551,36 +65,39 @@ def _load(name: str) -> dict | None:
         return json.load(f)
 
 
+def _git_show(sha: str, name: str) -> dict | None:
+    """A record as committed at ``sha``, or None when that commit has no
+    parseable version of it."""
+    try:
+        text = subprocess.run(
+            ["git", "show", f"{sha}:{name}"],
+            capture_output=True, text=True, cwd=ROOT, check=True,
+        ).stdout
+        return json.loads(text)
+    except (subprocess.CalledProcessError, json.JSONDecodeError, OSError):
+        return None
+
+
 def _git_prev_record(name: str, cur: dict) -> tuple[str, dict] | None:
     """The last COMMITTED version of a tier bench record that differs
-    from the working copy — (short sha, record) or None. Makes the
-    gen-tier cross-round anchor machine-readable (VERDICT r13 #8): the
-    chain rewrites BENCH_gen_*.json in place, so 'previous round' for
-    a tier record means its previous git version, not a BENCH_r*.json
-    (those are sf0.1-only)."""
-    import subprocess
-
+    from the working copy — (short sha, record) or None. The chain
+    rewrites BENCH_gen_*.json in place, so 'previous round' for a tier
+    record means its previous git version, not a BENCH_r*.json (those
+    are sf0.1-only)."""
     try:
+        # --abbrev pins the sha width so the rendered text does not
+        # change as the object count grows.
         shas = subprocess.run(
-            ["git", "log", "-n", "8", "--format=%h", "--", name],
+            ["git", "log", "-n", "8", "--abbrev=7", "--format=%h", "--", name],
             capture_output=True, text=True, cwd=ROOT, check=True,
         ).stdout.split()
     except (subprocess.CalledProcessError, OSError):
         return None
     for sha in shas:
-        # Per-sha try/except: one malformed or deleted version must not
-        # abort the lookup — skip it and keep consulting older commits
-        # (ADVICE r14: a single bad sha silently dropped the whole
-        # tier-continuity line).
-        try:
-            text = subprocess.run(
-                ["git", "show", f"{sha}:{name}"],
-                capture_output=True, text=True, cwd=ROOT, check=True,
-            ).stdout
-            rec = json.loads(text)
-        except (subprocess.CalledProcessError, json.JSONDecodeError, OSError):
-            continue
-        if rec.get("value") and rec.get("calibration_sec") and (
+        # A malformed or deleted version is skipped, not fatal: older
+        # commits may still hold a usable record.
+        rec = _git_show(sha, name)
+        if rec and rec.get("value") and rec.get("calibration_sec") and (
             rec["value"] != cur.get("value")
             or rec["calibration_sec"] != cur.get("calibration_sec")
         ):
@@ -588,11 +105,53 @@ def _git_prev_record(name: str, cur: dict) -> tuple[str, dict] | None:
     return None
 
 
+def _all_queries(bench: dict) -> dict:
+    return {**bench["queries"], **bench.get("queries_extended", {})}
+
+
+def _audit_rows(audit: dict | None) -> dict:
+    return {r["query"]: r for r in (audit or {}).get("rows", [])}
+
+
+def mover_label(prev: dict | None, cur: dict | None) -> str:
+    """Counter verdict for a cross-round wall mover, from its scale-audit
+    rows in the previous and current record versions."""
+    same = (
+        prev is not None
+        and cur is not None
+        and all(prev[k] == cur[k] for k in MOVER_COUNTERS)
+    )
+    return "counters unchanged" if same else "counters changed"
+
+
+def _movers(name: str, sha: str, prev: dict, cur: dict) -> list[tuple]:
+    """(query, prev s, cur s, calibrated ratio, prev audit row, cur audit
+    row) for every query of a tier record whose calibrated wall moved
+    more than MOVER_RATIO either way, largest ratio first."""
+    audit = name.replace("BENCH_", "SCALE_AUDIT_")
+    pa, ca = _audit_rows(_git_show(sha, audit)), _audit_rows(_load(audit))
+    pq = _all_queries(prev)
+    out = []
+    for q, w in _all_queries(cur).items():
+        if q not in pq:
+            continue
+        ratio = (w / cur["calibration_sec"]) / (pq[q] / prev["calibration_sec"])
+        if max(ratio, 1 / ratio) > MOVER_RATIO:
+            out.append((q, pq[q], w, ratio, pa.get(q), ca.get(q)))
+    return sorted(out, key=lambda m: -m[3])
+
+
+def _counter_pair(prev: dict | None, cur: dict | None, key: str) -> str:
+    if prev is None or cur is None:
+        return "—"
+    return f"{prev[key]} -> {cur[key]}"
+
+
 def _tier_continuity_lines() -> list[str]:
     """Calibrated cross-round ratios for every gen-tier bench record
     present: (cur.value/cur.cal) / (prev.value/prev.cal) against the
-    last differing committed version."""
-    out = []
+    last differing committed version, then the per-query movers."""
+    out, table, labels = [], [], []
     for name in ("BENCH_gen_sf1.json", "BENCH_gen_sf3.json", "BENCH_gen_sf10.json",
                  "BENCH_gen_sf0.3.json"):
         cur = _load(name)
@@ -614,25 +173,19 @@ def _tier_continuity_lines() -> list[str]:
         if e0 and e1:
             er = (e1 / cur["calibration_sec"]) / (e0 / rec["calibration_sec"])
             line += f"; extended {e0} -> {e1} s, calibrated **{er:.3f}x**"
-        # Anchor-dominated ratios mislead (round 15: gen_sf1 read
-        # 1.123x "slower" while the RAW headline got faster, purely
-        # because the r14 version was recorded in a 17% slower CPU
-        # window) — say so inline when the anchors differ enough to
-        # manufacture most of the ratio.
+        # When the two anchors differ enough to manufacture most of the
+        # ratio, the raw ratio is printed beside it.
         cal_shift = cur["calibration_sec"] / rec["calibration_sec"]
         if abs(cal_shift - 1.0) > 0.10:
             raw = cur["value"] / rec["value"]
             line += (
                 f" — CAUTION: anchors differ {cal_shift:.2f}x between the two"
                 f" windows, so this ratio is partly anchor-dominated (raw"
-                f" {raw:.3f}x); adjudicate with an idle re-measure before"
+                f" {raw:.3f}x); read the movers' counters below before"
                 f" treating it as a plan change"
             )
-        # Within-run anchor pair (bench.py emits calibration_sec_start
-        # before the headline loop since round 16, VERDICT r15 #8): a
-        # >10% start/end divergence means the record's OWN window was
-        # contended while it ran — flag it in the artifact so the
-        # adjudication doesn't have to live in judge prose.
+        # A >10% divergence of a record's own start/end anchor pair means
+        # its window was contended while it ran.
         for tag, r in (("prev", rec), ("cur", cur)):
             cs = r.get("calibration_sec_start")
             if cs and abs(cs / r["calibration_sec"] - 1.0) > 0.10:
@@ -642,8 +195,17 @@ def _tier_continuity_lines() -> list[str]:
                     f" window, per-query walls unreliable"
                 )
         out.append(line)
+        for q, w0, w1, r, pa, ca in _movers(name, sha, rec, cur):
+            labels.append(mover_label(pa, ca))
+            table.append(
+                f"| {name} | {q} | {w0} | {w1} | {r:.2f}x "
+                f"| {_counter_pair(pa, ca, 'stages')} "
+                f"| {_counter_pair(pa, ca, 'shuffle_write_mb')} "
+                f"| {labels[-1]} |"
+            )
     if not out:
         return []
+    unchanged = labels.count("counters unchanged")
     return [
         "## Cross-round continuity at the generated tiers (calibrated)",
         "",
@@ -654,35 +216,65 @@ def _tier_continuity_lines() -> list[str]:
         "",
         *out,
         "",
+        f"Movers: every query whose calibrated wall moved more than "
+        f"{MOVER_RATIO}x either way, with its stages and shuffle write "
+        "(MB) from the same tier's scale-audit record at the same two "
+        "commits. Unchanged counters mean the same plan did the same "
+        "work; changed counters mean the plan changed. A change inside "
+        "a UDF or kernel body moves no counter: re-measure such a query "
+        "with `scripts/idle_remeasure.py`.",
+        "",
+        f"- movers: **{len(table)}** — counters unchanged **{unchanged}**, "
+        f"counters changed **{len(table) - unchanged}**",
+        "",
+        "| record | query | prev s | cur s | calibrated | stages | shufW MB | counters |",
+        "|---|---|---|---|---|---|---|---|",
+        *table,
+        "",
     ]
 
 
-#: extra curve points beyond the flagged sf0.1->10x pair: (label,
-#: multiplier, bench json, audit json) — sections render only for the
-#: files that exist.
-EXTRA_TIERS = [
+#: every curve point: (label, row multiplier, bench json, audit json)
+#: — sections render only for the files that exist.
+TIERS = [
+    ("1x", 1, "BENCH_sf0.1.json", "SCALE_AUDIT.json"),
     ("3x", 3, "BENCH_gen_sf0.3.json", "SCALE_AUDIT_gen_sf0.3.json"),
+    ("10x", 10, "BENCH_gen_sf1.json", "SCALE_AUDIT_gen_sf1.json"),
     ("30x", 30, "BENCH_gen_sf3.json", "SCALE_AUDIT_gen_sf3.json"),
-    # 100x is a FULL run (headline + extended) — regen_scale_evidence.sh
-    # runs the whole set there, and it's the extended coverage at this
-    # tier that caught the round-8 LSH quadratic. Headline-only remains
-    # an env-flag option (SPARK_GRAFT_BENCH_HEADLINE_ONLY) for quick
-    # re-measures; the renderers below skip extended_total=0 records.
     ("100x", 100, "BENCH_gen_sf10.json", "SCALE_AUDIT_gen_sf10.json"),
 ]
+#: the points beyond the flagged sf0.1 -> 10x pair
+EXTRA_TIERS = [t for t in TIERS if t[1] not in (1, 10)]
+
+
+def _flagged_section(flagged: list[dict]) -> list[str]:
+    """Shuffle write of each flagged query at every audited tier."""
+    tiers = [(label, _audit_rows(a)) for label, _, _, name in TIERS if (a := _load(name))]
+    if not flagged or not tiers:
+        return []
+    lines = [
+        "## Flagged queries: shuffle write (MB) at every audited tier",
+        "",
+        "| query | " + " | ".join(label for label, _ in tiers) + " |",
+        "|---|" + "---|" * len(tiers),
+    ]
+    for r in flagged:
+        cells = [str(rows[r["query"]]["shuffle_write_mb"]) if r["query"] in rows else "—"
+                 for _, rows in tiers]
+        lines.append(f"| {r['query']} | " + " | ".join(cells) + " |")
+    return lines + [""]
 
 
 def _mid_tier_section(b0: dict, b1: dict) -> list[str]:
-    """Extra curve points (3x below, 30x above the flagged 10x pair):
-    evidence the curve is smooth and keeps its slope past the graded
-    span, not a two-endpoint artifact."""
-    q0 = {**b0["queries"], **b0.get("queries_extended", {})}
+    """Extra curve points (3x below, 30x and 100x above the flagged 10x
+    pair)."""
+    q0 = _all_queries(b0)
     rows = []
     for label, mult, bench_name, audit_name in EXTRA_TIERS:
         bm = _load(bench_name)
         if not bm:
             continue
-        qm = {**bm["queries"], **bm.get("queries_extended", {})}
+        qm = _all_queries(bm)
         worst_r, worst_q = max(
             (qm[k] / max(q0[k], 1e-3), k) for k in q0 if k in qm
         )
@@ -695,7 +287,14 @@ def _mid_tier_section(b0: dict, b1: dict) -> list[str]:
         rows.append((label, mult, bm, worst_q, worst_r, spill))
     if not rows:
         return []
-    lines = ["## Extra curve points", ""]
+    lines = [
+        "## Extra curve points",
+        "",
+        "Each generated tier's bench record against sf0.1: headline ratio, "
+        "the query with the largest wall ratio, and how many queries its "
+        "scale audit saw spill.",
+        "",
+    ]
     pts = sorted(
         [(1, b0), (10, b1)] + [(m, bm) for _, m, bm, *_ in rows]
     )
@@ -717,80 +316,13 @@ def _mid_tier_section(b0: dict, b1: dict) -> list[str]:
         if spill is not None:
             line += f"; spilled queries: {spill}"
         lines.append(line + ".")
-        note = MID_TIER_WORST_NOTES.get((label, worst_q))
-        if note:
-            lines.append(f"  - `{worst_q}` investigated: {note}")
-    lines += [
-        "",
-        "The density-artifact operators found at the gen tiers are all",
-        "fixed in shipped code and these benches measure the fixed",
-        "versions: `kmeans_iterate`'s centroid codebook is sqrt(N)-sized",
-        "(round 6 — smallest power of 10 whose square covers the corpus;",
-        "16.9 s -> 3.2 s at 30x when fixed); `fuzzy_blocked_match`'s",
-        "block-key suffix length is scale-aware (round 7 —",
-        "`fuzzy_block_len` picks the smallest L with 10^L * 100 >= N,",
-        "mirrored as a scalar subquery in the oracle; L=3 at graded",
-        "tiers, L=4 at 10x/30x); and `dedup_embedding_lsh`'s plane count",
-        "is scale-aware (round 8, caught by the first FULL extended run",
-        "at 100x: the fixed 8-plane / 256-bucket key made in-bucket pair",
-        "expansion N^2/256, hidden below 100x only because the",
-        "pair->vector joins broadcast — at 200k vectors it shuffled",
-        "15.8 GB and spilled 121 GB over 332 s; `lsh_dedup_planes` holds",
-        "expected occupancy at 32 via the smallest P with 2^P * 32 >= N,",
-        "mirrored in the oracle — P=8 at all graded tiers, P=10/11/13 at",
-        "10x/30x/100x, 332 s -> ~9 s). All derivations are integer-only",
-        "and computed identically by both engines, so results stay",
-        "bit-identical at every tier.",
-        "",
-        "Two further 100x extended-run findings, both addressed in the",
-        "session config or documented as design cost:",
-        "",
-        "- `q21_sole_late_supplier` (linear shuffle, 1.9 GB at 100x)",
-        "  spilled 9.3 GB through AQE's 64 MB default advisory partition",
-        "  target: a 64 MB post-shuffle partition expands ~5x as unsafe",
-        "  rows + sort buffers against ~300 MB of local per-task",
-        "  execution memory. The session default is now 16 MB (zero",
-        "  spill, wall 16.2 -> 12.8 s; sf0.1 headline unchanged at",
-        "  14.1 s). Cluster translation: advisory size ~= executor",
-        "  memory * fraction / cores / ~5, not a constant.",
-        "- the IVF assignment family (`similarity_ann_ivf`,",
-        "  `kmeans_iterate`): through round 8 the exact flat argmin was",
-        "  N x C distance folds with C = N/MOD growing linearly within",
-        "  a MOD decade — O(N^1.5), and the 100x tier's wall-worst",
-        "  queries (~19 s / 25-50 s). Round 9 SHIPPED the hierarchical",
-        "  swap that note used to defer to \"real deployments\": above",
-        "  64 cells assignment goes two-level (supers = every",
-        "  `ivf_super_factor`-th centroid, ~sqrt(C) of them), each",
-        "  vector folds over the supers then over its TOP-2 supers'",
-        "  children (IMI-style multi-probe) — O(N^1.25) total, still",
-        "  zero vector-side shuffle, mirrored integer-for-integer in",
-        "  the DuckDB oracle (f=1 at every graded tier <= 30x, so",
-        "  graded results stay bit-identical; hierarchy-active parity",
-        "  is pinned by tests/test_ivf_hier_parity.py). Measured at",
-        "  100x after round 9: similarity_ann_ivf ~19 -> 10.6 s,",
-        "  kmeans_iterate 25-50 -> 6.9 s, both zero spill. Round 12",
-        "  re-kernelled the assignment itself (the round-11 PQ",
-        "  precedent): the struct-least Catalyst folds over broadcast",
-        "  codebook arrays became an Arrow/numpy mapInPandas with the",
-        "  ~sqrt(N)-bounded codebook shipped in the closure — a pure",
-        "  map, zero broadcast exchange left in the plan, same",
-        "  left-associated arithmetic and first-min tie-breaks, with",
-        "  the family's l2sq rounding migrated F.round ->",
-        "  round_half_up on both engines (bit-identical by",
-        "  construction); old-vs-new exceptAll = 0 at every tier,",
-        "  kmeans_iterate 4.61 -> 2.33 s at 100x. The residual trade —",
-        "  hierarchical assignment is approximate at cell boundaries —",
-        "  is quantified in CATALOG.md's recall appendix and recovered",
-        "  by the scaled `ivf_nprobe` default.",
-        "",
-    ]
+    lines.append("")
     return lines
 
 
 def _curation_section() -> list[str]:
     """End-to-end curation curve, rendered from CURATION_BENCH.json
-    (scripts/curation_bench.py — one subprocess per tier so JVM startup
-    is billed identically at every point)."""
+    (scripts/curation_bench.py)."""
     cb = _load("CURATION_BENCH.json")
     if not cb:
         return []
@@ -800,28 +332,23 @@ def _curation_section() -> list[str]:
         f"**{t['wall_sec']} s** ({t['mult']}x docs)" for t in tiers
     )
     worst = max(tiers[1:], key=lambda t: t["wall_sec"] / base["wall_sec"])
-    lines = [
+    return [
         "## End-to-end curation curve",
         "",
-        "The composed six-stage pipeline (`python examples/curate_corpus.py"
-        " <tier> <out>`: clean -> LSH dedup -> decontaminate -> mix ->"
-        " split -> pack, id-only joins between stages, partitioned text"
-        " write at the end), one subprocess per tier (JVM startup billed"
-        " identically):",
+        "Wall of the six-stage `examples/curate_corpus.py` pipeline (clean"
+        " -> LSH dedup -> decontaminate -> mix -> split -> pack ->"
+        f" partitioned write) per documents tier; {cb['note']}.",
         "",
         f"wall: {curve}; worst point "
         f"{worst['wall_sec'] / base['wall_sec']:.1f}x wall at "
         f"{worst['mult']}x documents.",
         "",
     ]
-    return lines
 
 
 def _idle_remeasure_section() -> list[str]:
-    """Driver-window noise adjudication, rendered from
-    IDLE_REMEASURES.json (scripts/idle_remeasure.py — round-15 VERDICT
-    #1/#2: the idle values that adjudicate elevated committed records
-    must live in a committed artifact, not prose)."""
+    """Idle re-measures of cross-round movers, rendered from
+    IDLE_REMEASURES.json (scripts/idle_remeasure.py)."""
     loaded = _load("IDLE_REMEASURES.json")
     if not loaded:
         return []
@@ -885,23 +412,15 @@ def _idle_remeasure_record(ir: dict) -> list[str]:
 
 def _dec38_section() -> list[str]:
     """DECIMAL(38,0) escape-hatch cost, rendered from DEC38_BENCH.json
-    (scripts/dec38_bench.py — round-15 VERDICT #4: the headroom guard's
-    migration path must have a measured cost, not a designed-on-the-
-    spot one)."""
+    (scripts/dec38_bench.py)."""
     db = _load("DEC38_BENCH.json")
     if not db:
         return []
     lines = [
         "## DECIMAL(38,0) money-accumulator escape hatch (measured)",
         "",
-        "`tests/test_money_headroom.py` trips near ~sf25 (charge_scaled"
-        " at q1's 4-group grain) and points at the `dec38_sql` migration"
-        " (functions/money.py), which is implemented and oracle-verified"
-        " (`groupby_agg_dec38`) — this is its measured premium on the"
-        " minimal q1 charge shape, where the A/B delta is exactly the"
-        " accumulator type (same filter, groupBy, and count; adjacent"
-        " warm min-of-"
-        f"{db['runs_per_point']} runs):",
+        "BIGINT vs DECIMAL(38,0) money accumulator (`scripts/dec38_bench.py`,"
+        f" adjacent warm min-of-{db['runs_per_point']} runs): {db['note']}.",
         "",
         "| tier | BIGINT s | DECIMAL(38,0) s | dec38 / bigint |",
         "|---|---|---|---|",
@@ -911,40 +430,23 @@ def _dec38_section() -> list[str]:
             f"| {t['tier']} ({t['mult']}x) | {t['bigint_min_sec']} "
             f"| {t['dec38_min_sec']} | **{t['dec38_over_bigint']}x** |"
         )
-    lines += [
-        "",
-        "Past-int64 failure mode under Spark 4's default ANSI mode is a"
-        " LOUD `ARITHMETIC_OVERFLOW` (pinned in tests/test_money_dec38.py"
-        " along with exact-beyond-int64 parity of the decimal form), so"
-        " the premium is paid only at tiers the guard names, never"
-        " preemptively.",
-        "",
-    ]
+    lines.append("")
     return lines
 
 
 def _bucketed_section() -> list[str]:
     """Bucketed co-partitioned layout vs plain parquet, rendered from
-    BUCKETED_BENCH.json (scripts/bucketed_layout_bench.py — VERDICT r8
-    #1: measure the layout move the crossover flag note promises)."""
+    BUCKETED_BENCH.json (scripts/bucketed_layout_bench.py)."""
     bb = _load("BUCKETED_BENCH.json")
     if not bb:
         return []
     lines = [
         "## Bucketed co-partitioned layout (the crossover answer, measured)",
         "",
-        "The flag note above ends with \"at that scale you co-partition/"
-        "bucket orders+lineitem instead\" — this section measures that "
-        "move instead of asserting it. orders+lineitem are written once "
-        "as bucketed, bucket-sorted catalog tables on the orderkey "
-        "(`sinks.write_bucketed_fact_layout`, one file per bucket), the "
-        "fixture tables are repointed at them "
-        "(`sources.set_layout_override` — a metastore repoint; query "
-        "code unchanged), and the SAME shipped queries re-run. "
-        "`tests/test_bucketed_layout.py` locks the plan shapes: the "
-        "bucketed fact-fact join and bucket-key aggregate plan ZERO "
-        "shuffle exchanges while the parquet baseline provably plans "
-        "them.",
+        "The same shipped queries over plain parquet and over the family's "
+        "fact tables written once as bucketed, bucket-sorted catalog tables "
+        "(`scripts/bucketed_layout_bench.py`; plan shapes locked in "
+        "`tests/test_bucketed_layout.py`):",
         "",
         "| family | tier | query | wall parquet s | wall bucketed s | shufW parquet MB | shufW bucketed MB | exchanges parquet | exchanges bucketed |",
         "|---|---|---|---|---|---|---|---|---|",
@@ -968,14 +470,12 @@ def _bucketed_section() -> list[str]:
         for fam in families
         for t in fam["tiers"]
     )
-    # Break-even arithmetic (VERDICT r10 #2): the write is paid once;
-    # how many query executions repay it? Two bases per family, both
-    # computed from the LARGEST measured tier of the committed record:
+    # Break-even: the write is paid once; how many query executions
+    # repay it? Two bases per family, both at the LARGEST measured tier:
     # local wall (write wall / per-query wall saved) and shuffle bytes
-    # (write shuffle / per-query shuffle eliminated) — the byte basis
-    # is the cluster-relevant one, where eliminated shuffle crosses the
-    # network instead of a local SSD and the write's own shuffle is the
-    # same one-time network cost.
+    # (write shuffle / per-query shuffle eliminated) — the byte basis is
+    # the cluster-relevant one, where eliminated shuffle crosses the
+    # network and the write's own shuffle is the same one-time cost.
     breakeven_lines = []
     for fam in families:
         t = fam["tiers"][-1]
@@ -1001,9 +501,8 @@ def _bucketed_section() -> list[str]:
             w["shuffle_write_mb"] / s for s in shuf_saves if s > shuf_floor
         )
         # A tier where no query clears the 0.05 s / 5% floors leaves
-        # these lists empty (and the min() generators below would
-        # raise): render the honest "no measured saving" line instead
-        # of crashing the whole SCALING.md regeneration (ADVICE r11).
+        # these lists empty: render a "no measured saving" line instead
+        # of crashing the whole SCALING.md regeneration.
         if not wall_n or not shuf_n:
             breakeven_lines.append(
                 f"- **{fam['family']}** (at {t['tier']}): write "
@@ -1029,187 +528,19 @@ def _bucketed_section() -> list[str]:
         "",
         f"One-off bucketed writes (paid at ingest): {writes}.",
         "",
-        "Reading (orderkey family): at the 100x tier the per-query "
-        "shuffle collapses ~2,500-40,000x (q3 601 MB -> 17 KB, "
-        "join_star 1009 MB -> 26 KB, q18 493 MB -> 0.2 MB), the "
-        "orderkey join/agg exchanges disappear from the plans "
-        "entirely, and local wall improves 2.2-6.0x on every query "
-        "(join_star keeps its 2 downstream exchanges — customer join "
-        "+ final agg — by design). Bucket "
-        "count matters: bucket-grain scans can't split files, so "
-        "n_buckets IS the layout's scan parallelism — the first run at "
-        "32 buckets (1x cores) made q18's full-table pre-aggregate "
-        "1.8x SLOWER than parquet (one non-overlapping task wave); 64 "
-        "buckets (2x cores) turned that into 1.7-2.0x faster (measured "
-        "5.1 s @32 -> 1.6 s @64 -> 2.0 s @128). On a cluster the "
-        "eliminated bytes also cross the network: the layout is the "
-        "difference between a per-query half-terabyte shuffle (at "
-        "100 TB scale) and none — break-even arithmetic below.",
-        "",
-        "Reading (events_user family — round 10, proving the mechanism "
-        "generalizes beyond the orderkey pair): events bucketed on "
-        "user_id with a COMPOUND write-time sort (user_id, ts_ns, "
-        "event_id) — the exact required ordering of the per-user "
-        "windows — makes the sessionize/funnel shuffle surface vanish "
-        "at every tier through 100x: events_sessionize plans 2 -> 0 "
-        "exchanges and its shuffle collapses 222 MB -> 0 B at 100x "
-        "(wall 1.20 -> 0.50 s; the "
-        "window consumes bucketing for distribution AND the write-time "
-        "order for sort, and the downstream session aggregate is "
-        "user_id-prefixed so it stays exchange-free too); events_funnel "
-        "plans 9 -> 0 exchanges (every stage is user_id-keyed); "
-        "events_retention keeps only its 2 small cohort-rollup "
-        "exchanges (not on the bucket key by design), shuffle 119 -> "
-        "0.4 MB at 100x, wall 2.0x. One-off write: ~1.7-3.1 s / "
-        "40-393 MB — break-even arithmetic below. Plan shapes locked at "
-        "the fixture tier in tests/test_bucketed_layout.py "
-        "(exchange-free user-window with a provably exchange-full "
-        "parquet baseline, compound-sort elimination, shipped-query "
-        "row parity).",
-        "",
-        "**Break-even arithmetic** (write-once cost vs per-query "
-        "savings, computed from this file's committed records at the "
-        "largest measured tier; wall basis is the honest LOCAL number "
-        "— the shuffle-byte basis is the cluster-relevant one, since "
-        "the eliminated bytes cross the network there while the "
-        "write's own shuffle is the same one-time network cost):",
+        "**Break-even arithmetic** (one-off write cost over per-query "
+        "savings at the largest measured tier, on a local-wall basis and "
+        "a shuffle-byte basis):",
         "",
         *breakeven_lines,
         "",
-        "Local arithmetic says the layout is NOT a one-heavy-join win "
-        "on one machine — it pays back over a query mix that hits the "
-        "bucket key tens of times (exactly how a warehouse fact table "
-        "is used). On a network-bound cluster the byte basis applies "
-        "and the write amortizes in a handful of executions.",
-        "",
     ]
-    return lines
-
-
-#: The r9/r10 committed chain walls for the seven >20% movers
-#: (BENCH_sf0.1.json at 518a1e4 / 70398e6) — the comparison baseline
-#: for the closure lines, which read the LIVE record so every future
-#: chain regen re-tests the closure automatically.
-R9_R10_EXT_MOVERS = {
-    "events_ewma": (0.561, 0.771),
-    "decontaminate": (0.630, 0.864),
-    "embedding_pca_project": (0.593, 0.774),
-    "events_anomaly_mad": (0.398, 0.493),
-    "lm_bigram_score": (0.623, 0.756),
-    "events_seasonal_decompose": (0.352, 0.424),
-    "events_rolling_distinct": (0.394, 0.474),
-}
-
-
-def _extended_drift_section() -> list[str]:
-    """VERDICT r10 #3: the +3.9% r9->r10 extended-bench drift,
-    itemized mover by mover with the same closure protocol the
-    headline five got in round 10."""
-    lines = [
-        "## Extended-bench drift r9 -> r10, itemized (round 11)",
-        "",
-        "Driver records: extended total 33.788 -> 35.104 s (+3.9%) at "
-        "a par anchor (0.896 / 0.894). Committed chain records "
-        "(BENCH_sf0.1.json at 518a1e4 vs 70398e6): 32.551 -> 34.747 s "
-        "(+6.7% raw) — but the chain anchors moved 0.888 -> 0.933 "
-        "(+5.1% slower sandbox), so the CALIBRATED chain drift is "
-        "+1.6%. Every mover above 20% (all sub-second), with its own "
-        "r10 min-of-3 spread beside the delta:",
-        "",
-        "| query | r9 s | r10 s | ratio | delta s | r10 spread s | closure |",
-        "|---|---|---|---|---|---|---|",
-        "| events_ewma | 0.561 | 0.771 | 1.37x | 0.210 | 0.045 | "
-        "re-measured quiet (below) — also the documented host-I/O "
-        "contention query (CLAUDE.md precedent) |",
-        "| decontaminate | 0.630 | 0.864 | 1.37x | 0.234 | 0.316 | "
-        "the round-10 accepted local trade (window -> explode-free "
-        "size() branch: wall par locally, the win is 495 -> 148 MB "
-        "cluster shuffle); delta < its own spread |",
-        "| embedding_pca_project | 0.593 | 0.774 | 1.31x | 0.181 | "
-        "0.647 | delta is 0.3x its OWN r10 min-of-3 spread — "
-        "same-session noise; re-measured quiet (below) |",
-        "| events_anomaly_mad | 0.398 | 0.493 | 1.24x | 0.095 | "
-        "0.160 | delta < spread; re-measured quiet (below) |",
-        "| lm_bigram_score | 0.623 | 0.756 | 1.21x | 0.133 | 0.365 | "
-        "delta < spread — noise family |",
-        "| events_seasonal_decompose | 0.352 | 0.424 | 1.20x | 0.072 "
-        "| 0.198 | delta < spread — noise family |",
-        "| events_rolling_distinct | 0.394 | 0.474 | 1.20x | 0.080 | "
-        "0.297 | delta < spread — noise family |",
-        "",
-        "The seven movers sum to ~1.0 s of the 2.2 s chain delta; the "
-        "remainder is spread across <20% movers. No plan changed for "
-        "any of these between the rounds (git-verified: round 10's "
-        "events_queries.py diff was confined to events_range_join; no "
-        "other mover's function was touched except decontaminate's "
-        "accepted re-plan).",
-        "",
-    ]
-    cur = _load("BENCH_sf0.1.json")
-    if cur:
-        cq = {**cur["queries"], **cur.get("queries_extended", {})}
-        cv = {**cur.get("variance", {}), **cur.get("variance_extended", {})}
-        lines += [
-            "Closure (round 11): the full chain was regenerated this "
-            "round (for the range-join re-plan) — an independent, "
-            "protocol-identical measurement of every mover on "
-            f"otherwise-untouched code (anchor "
-            f"{cur.get('calibration_sec')} s vs r10's 0.933). Current "
-            "chain walls vs the r9/r10 pair:",
-            "",
-        ]
-        still_open = []
-        for q, (r9v, r10v) in R9_R10_EXT_MOVERS.items():
-            now = cq.get(q)
-            if now is None:
-                continue
-            reverted = now <= r10v or (now - r9v) <= (cv.get(q) or 0)
-            lines.append(
-                f"- `{q}`: {r9v:.3f} -> {r10v:.3f} -> **{now:.3f} s** "
-                f"(spread {cv.get(q)}) — "
-                + (
-                    "the accepted round-10 trade; re-planned again in "
-                    "round 13 (eval join shuffle_hash — see the 100x "
-                    "investigation note), so the current value "
-                    "reflects the new plan, not r10's."
-                    if q == "decontaminate"
-                    else "reverted toward r9 / within its own spread; "
-                    "the r10 value was the chain window, not the plan."
-                    if reverted
-                    else "STILL ELEVATED — on the watch list."
-                )
-            )
-            if q != "decontaminate" and not reverted:
-                still_open.append(q)
-        lines += [
-            "",
-            "A protocol caveat discovered while re-measuring "
-            "standalone: a fresh session that runs ONE query pays "
-            "per-query codegen/JIT that the in-chain context (40+ "
-            "prior queries) amortizes — standalone min-of-5 walls run "
-            "~0.1-0.2 s above in-chain values for these sub-second "
-            "queries, so closures compare chain records to chain "
-            "records, never chain to standalone.",
-            "",
-        ]
-        if not still_open:
-            lines.append(
-                "All non-decontaminate movers closed: the r9 -> r10 "
-                "extended drift was the documented chain-window noise "
-                "family plus one accepted re-plan trade."
-            )
-        else:
-            lines.append(
-                "Open after re-measure: " + ", ".join(still_open) + "."
-            )
-        lines.append("")
     return lines
 
 
 def _misbroadcast_section() -> list[str]:
-    """Round-11 systematic sweep for the pathology class the range-join
-    regime measurement exposed: Catalyst broadcasting a side that grows
-    with the corpus. Rendered from MISBROADCAST_AUDIT.json
+    """Catalog-wide sweep for broadcasts of a side that grows with the
+    corpus, rendered from MISBROADCAST_AUDIT.json
     (scripts/misbroadcast_audit.py)."""
     mb = _load("MISBROADCAST_AUDIT.json")
     if not mb:
@@ -1219,120 +550,15 @@ def _misbroadcast_section() -> list[str]:
     return [
         f"## Misbroadcast audit at {mb['tier']} (the range-join pathology, swept catalog-wide)",
         "",
-        "The round-11 range-join finding was a CLASS, not a one-off: a "
-        "pruned fact-table projection can sit under Catalyst's "
-        "broadcast threshold at mid tiers, so the optimizer broadcasts "
-        "the side that grows with the corpus. "
-        f"`scripts/misbroadcast_audit.py` sweeps all "
-        f"{mb['queries_audited']} graded+bench queries' EXECUTED plans "
-        "at the 100x tier for BroadcastExchanges whose subtree scans a "
-        "fact table, classifying each as raw (no selective filter, no "
-        "aggregation — the pathology) or reduced (filtered/aggregated "
-        "first — legitimate when the reduction is sublinear in corpus "
-        "size).",
+        f"Executed plans of {mb['queries_audited']} graded and bench queries "
+        "swept for BroadcastExchanges over a fact-table scan: raw (no "
+        "selective filter or aggregation below it) or reduced (filtered or "
+        "aggregated first). Each reduced entry's reason is in the "
+        "`REDUCED_OK` allowlist of `tests/test_misbroadcast_canary.py`.",
         "",
-        f"- **raw fact broadcasts: {len(raw)}**"
-        + (" — " + ", ".join(raw) if raw else
-           " (two found and fixed this round: "
-           "`dedup_minhash_verified` broadcast the raw token-array "
-           "projection of documents on its second verify join — now "
-           "shuffle_hash building the bounded pairs side, measured par "
-           "at 100x, plan-locked in tests/test_plans.py; "
-           "`decontaminate`'s n_total join-back broadcast one skinny "
-           "row per TRAINING doc — a 75%-pass modulo filter fooled the "
-           "classifier into 'reduced' but is not selective in scale "
-           "terms; now shuffle_hash building the contaminated-docs "
-           "side, measured par at 100x)"),
-        f"- reduced fact broadcasts: {len(reduced)} — adjudicated by "
-        "family: single-query-vector selections (similarity family — "
-        "bounded at 1 row by construction); bounded-domain aggregates "
-        "(day/type grids: events_zscore/anomaly_mad/seasonal_decompose"
-        "/rolling_distinct; value-bucket dimension: window_range_frame"
-        "); sublinear codebooks (dedup_embedding_lsh — sqrt(N)-sized "
-        "by derivation; kmeans_iterate left this list in round 12: its "
-        "numpy assignment kernel ships the codebook in the mapInPandas "
-        "closure, no broadcast remains); vocabulary/LM folds "
-        "(text_tfidf, lm_quality_score, lm_bigram_score — token-type "
-        "domains grow ~Heaps-law sublinearly; decontaminate left this "
-        "list in round 13: its eval-shingle join is shuffle_hash now, "
-        "no broadcast remains); the stored band "
-        "index (dedup_against_corpus — grows with the corpus, and its "
-        "docstring already names the scale path: a pre-bucketed index "
-        "table the probe equi-joins, with Catalyst flipping to a "
-        "shuffle join as the estimate grows); per-user aggregates "
-        "(events_funnel — corpus-linear in users, flips to shuffle "
-        "joins automatically as estimates grow, and the MEASURED scale "
-        "answer is the bucketed user_id layout: 9 -> 0 exchanges at "
-        "every tier, section above).",
-        "",
-    ]
-
-
-def _expansion_audit_section() -> list[str]:
-    """Round-11 verified inventory of every candidate/row expansion in
-    the catalog (VERDICT r10 #5): the CLAUDE.md rule — expansion
-    belongs on the side with fewer rows at that point in the plan —
-    audited site by site instead of proven by one example. Each line
-    states which side expands, its bound, and why that side is the
-    smaller (or only) one."""
-    return [
-        "## Candidate-expansion side audit (round 11 — every site verified)",
-        "",
-        "Rule (CLAUDE.md): any candidate-pair expansion — buckets, "
-        "bands, shingles, salts — belongs on the side with fewer rows "
-        "at that point in the plan. Verified inventory:",
-        "",
-        "- `events_range_join` (plans/events_queries.py::_range_join): "
-        "two-bucket explode on the FILTERED SIGNUP side (~20% of "
-        "events), never the follow side — the round-10 flip that "
-        "motivated the rule (15.4 -> 4.9 s at 100x), regime-measured "
-        "round 11 (section above).",
-        "- `minhash_bands` (operators/dedup.py:148): banded-signature "
-        "explode emits exactly K/band_rows rows per doc — symmetric "
-        "self-candidate generation, no side choice exists; downstream "
-        "pair fan-out bounded by MINHASH_MAX_BUCKET (mega-buckets "
-        "routed to the linear exact-group path).",
-        "- `dedup_against_corpus` (operators/dedup.py:693): the band "
-        "explode and fresh signatures run ONLY on the incoming batch "
-        "(the small side by construction); the corpus side is the "
-        "stored DISTINCT (band, sig) index, never re-expanded.",
-        "- `dedup_ngram_jaccard` / `dedup_containment` "
-        "(operators/dedup.py:520/1059): the shingle explode is per-doc "
-        "content — single-table, corpus-linear by necessity; the PAIR "
-        "expansion is in-row from df-capped posting lists "
-        "(JACCARD_DF_CAP bounds per-shingle fan-out), never a "
-        "join-side replication.",
-        "- `dedup_segments` (operators/dedup.py:976): segment explode "
-        "on documents (only side), bounded at ceil(len/SEGMENT_WIDTH) "
-        "rows per doc; cross-doc pair fan-out df-capped.",
-        "- `dedup_simhash_near` (operators/dedup.py:1240): constant "
-        "SIMHASH_BANDS block keys per doc (pigeonhole), bucket-capped, "
-        "pairs expand in-row from sorted member lists.",
-        "- `doc_winnow` (operators/text.py:480): fingerprint explode "
-        "per doc, bounded by distinct window minima — zero shuffle, "
-        "map-side only (plan-locked).",
-        "- `events_hop_window` (plans/events_queries.py:96): Spark's "
-        "native window-slide expansion, constant width/slide = 2 rows "
-        "per event on the single input table; partial aggregation "
-        "combines before the one shuffle.",
-        "- `events_rolling_distinct` (plans/events_queries.py:1028): "
-        "the x7 target-day fan-out runs AFTER day-grain dedup shrinks "
-        "input to distinct (day, user) — expansion on the reduced set.",
-        "- `salted_join` (operators/joins.py:39): the salt explode "
-        "replicates the BUILD (dimension) side n_salts times; the big "
-        "probe side gets a computed salt column, no row growth.",
-        "- `pack_sequences` chunking (plans/curation_queries.py:344): "
-        "per-doc stride sequence, bounded by len/CHUNK_STRIDE on the "
-        "only side.",
-        "- dense-grid densifiers (plans/advanced_agg.py:90, "
-        "plans/events_queries.py:316): sequence explodes over per-key "
-        "(lo, hi) BOUNDS rows — the already-aggregated small side, "
-        "never the fact rows.",
-        "- dimension posexplodes (operators/pca.py:81, "
-        "operators/similarity.py:731/780): constant x-dims expansion "
-        "feeding a map-side partial aggregate keyed by dimension — "
-        "combines before any shuffle; vectors themselves never "
-        "replicate.",
+        f"- **raw fact broadcasts: {len(raw)}**" + (" — " + ", ".join(raw) if raw else ""),
+        f"- reduced fact broadcasts: {len(reduced)}"
+        + (" — " + ", ".join(reduced) if reduced else ""),
         "",
     ]
 
@@ -1340,8 +566,7 @@ def _expansion_audit_section() -> list[str]:
 def _range_join_regimes_section() -> list[str]:
     """Every join regime of events_range_join measured at the big
     tier, rendered from RANGE_JOIN_REGIMES.json
-    (scripts/range_join_regimes.py — VERDICT r10 #1: the fallback
-    regime was asserted, never measured)."""
+    (scripts/range_join_regimes.py)."""
     rj = _load("RANGE_JOIN_REGIMES.json")
     if not rj:
         return []
@@ -1351,14 +576,7 @@ def _range_join_regimes_section() -> list[str]:
         "",
         "Identical dataflow, only the join-strategy hint varies "
         "(min-of-3 after an untimed per-regime warm run, calibration "
-        f"anchor {rj['calibration_sec']} s). Measuring the fallback "
-        "regime round 11 found the round-10 note's premise wrong: "
-        "Catalyst's unhinted pick was a BroadcastHashJoin building the "
-        "FOLLOW-side projection — the side that grows with the corpus "
-        "— not the signup side. The shipped form hints `shuffle_hash` "
-        "on the signup side; the spill-safe SortMergeJoin fallback "
-        "measures at par, so the plan is safe in whichever regime a "
-        "cluster lands in.",
+        f"anchor {rj['calibration_sec']} s):",
         "",
         "| regime | hint | wall min s | shuffle write MB | join | exchanges | spill MB |",
         "|---|---|---|---|---|---|---|",
@@ -1376,23 +594,10 @@ def _range_join_regimes_section() -> list[str]:
         )
     lines += [
         "",
-        "Why the 212 MB shuffle beats the 15.7 MB broadcast locally — "
-        "and why it is the only shape that survives 100 TB: the "
-        "broadcast regime's 'small' shuffle hides a single-threaded "
-        "hash build of the entire follow-side projection (every event "
-        "row), which grows linearly with the corpus until the driver "
-        "dies; the shuffle regimes partition BOTH sides on the bounded "
-        "(user_id, day-bucket) key, so per-task state is one slice of "
-        "the FILTERED signup side (shuffle_hash) or a spillable sorted "
-        "run (merge). The bucketed key keeps every regime skew-safe: "
-        f"max {fan['max_events_per_user_day']} / p99 "
+        f"Join-key fan-out: max {fan['max_events_per_user_day']} / p99 "
         f"{fan['p99_events_per_user_day']} events per (user, day) vs "
         f"{fan['max_events_per_user_lifetime']} / "
-        f"{fan['p99_events_per_user_lifetime']} per user lifetime — "
-        "join groups are one user-day, never one user-history. "
-        "`tests/test_plans.py::test_range_join_builds_hash_from_signup_side` "
-        "locks the shape: ShuffledHashJoin building the signup side or "
-        "the SMJ fallback tolerated, any BroadcastHashJoin fails.",
+        f"{fan['p99_events_per_user_lifetime']} per user lifetime.",
         "",
     ]
     return lines
@@ -1423,17 +628,17 @@ def _streaming_section() -> list[str]:
     return lines
 
 
-def main() -> None:
+def render() -> str:
+    """SCALING.md's text, computed from the committed records."""
     b0 = _load("BENCH_sf0.1.json")
     b1 = _load("BENCH_gen_sf1.json")
     a0 = _load("SCALE_AUDIT.json")
     a1 = _load("SCALE_AUDIT_gen_sf1.json")
-    assert b0 and b1, "run bench at both tiers first (see module docstring)"
+    if not (b0 and b1):
+        raise FileNotFoundError("run bench at both tiers first (see module docstring)")
 
-    q0 = {**b0["queries"], **b0.get("queries_extended", {})}
-    q1 = {**b1["queries"], **b1.get("queries_extended", {})}
-    s0 = {r["query"]: r for r in (a0 or {}).get("rows", [])}
-    s1 = {r["query"]: r for r in (a1 or {}).get("rows", [])}
+    q0, q1 = _all_queries(b0), _all_queries(b1)
+    s0, s1 = _audit_rows(a0), _audit_rows(a1)
 
     rows = []
     for name in q0:
@@ -1517,56 +722,16 @@ def main() -> None:
             f"- spilled at 10x: **{len(sp)}**"
             + ("" if not sp else " — " + ", ".join(sp))
         )
-    open_flags = [r for r in flagged if r["query"] not in FLAG_NOTES]
     out += [
         f"- flagged super-linear: **{len(flagged)}**"
         + ("" if not flagged else " — " + ", ".join(r["query"] for r in flagged)),
-        f"- open after investigation: **{len(open_flags)}**"
-        + ("" if not open_flags else " — " + ", ".join(r["query"] for r in open_flags)),
         "",
     ]
-    noted = [r for r in flagged if r["query"] in FLAG_NOTES]
-    if noted:
-        out += ["## Flag notes (investigated — measurement artifacts, evidence cited)", ""]
-        for r in noted:
-            out.append(f"- `{r['query']}`: {FLAG_NOTES[r['query']]}")
-        out.append("")
-    if WATCH_NOTES:
-        out += [
-            "## Watch list (below flag thresholds, re-measured after a "
-            "cross-round drift)",
-            "",
-        ]
-        for name, note in WATCH_NOTES.items():
-            cur = next((r for r in rows if r["query"] == name), None)
-            ratio = f" (this run: {cur['wall_ratio']}x)" if cur else ""
-            out.append(f"- `{name}`{ratio}: {note}")
-        out.append("")
+    out += _flagged_section(flagged)
     out += _mid_tier_section(b0, b1)
-    out += [
-        "## Correctness at 10x",
-        "",
-        "The full DuckDB oracle parity sweep also ran at the 10x tier"
-        " — first in round 6, re-run in round 8 on shipped code after"
-        " the scale-aware fuzzy-block/lateness re-plans: **183/184"
-        " queries hash-checked green, 0 failed** (`dedup_embedding_cosine`"
-        " was excluded until round 15, when its all-pairs oracle was"
-        " replaced by the block-bounded form — linear candidate set,"
-        " parity green at sf0.01/sf0.1/gen_sf1/gen_sf10, so sweeps now"
-        " cover the whole catalog — re-proven by the round-15 full"
-        " gen_sf1 sweep of all 185). The round-6 sweep caught two real"
-        " divergences invisible at graded scales — q15's raw-double"
-        " max electing different ulp-tied winners per engine, and q9's"
-        " round(sum(double)) half-cent boundary — both migrated to the"
-        " exact scaled-integer money pattern and re-verified at"
-        " sf0.001 / sf0.1 / 10x.",
-        "",
-    ]
     out += _tier_continuity_lines()
-    out += _extended_drift_section()
     out += _range_join_regimes_section()
     out += _misbroadcast_section()
-    out += _expansion_audit_section()
     out += _bucketed_section()
     out += _curation_section()
     out += _streaming_section()
@@ -1582,12 +747,14 @@ def main() -> None:
             f"| {r['wall_ratio']} | {r['shuffle_sf01_mb']} | {r['shuffle_sf1_mb']} "
             f"| {r['shuffle_ratio']} | {r['spill_sf1_mb']} |"
         )
+    return "\n".join(out) + "\n"
+
+
+def main() -> None:
+    text = render()
     with open(os.path.join(ROOT, "SCALING.md"), "w") as f:
-        f.write("\n".join(out) + "\n")
-    print(
-        f"wrote SCALING.md  (headline {h1 / h0:.1f}x, "
-        f"{len(flagged)} flagged: {[r['query'] for r in flagged]})"
-    )
+        f.write(text)
+    print("wrote SCALING.md")
 
 
 if __name__ == "__main__":
