@@ -248,6 +248,8 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        # resolved local[N] core count of the session that ran the queries
+        "cpus": spark.sparkContext.defaultParallelism,
         "calibration_sec": calibration,
         # Within-run window-health pair: calibration_sec_start runs
         # BEFORE the headline loop, calibration_sec (the cross-round
@@ -283,24 +285,28 @@ def main() -> None:
     with open(local_path, "w") as f:
         json.dump(record, f, indent=1)
         f.write("\n")
-    # Printed line: compact (scalars + headline per-query only) so the
-    # WHOLE line fits in the driver's stdout tail and parses as JSON.
-    print(
-        json.dumps(
-            {
-                "metric": record["metric"],
-                "value": total,
-                "unit": "sec",
-                "sf": record["sf"],
-                "calibration_sec": record["calibration_sec"],
-                "calibration_sec_start": record["calibration_sec_start"],
-                "calibrated_vs_prev_round": record["calibrated_vs_prev_round"],
-                "extended_total": record["extended_total"],
-                "queries": timings,
-                "variance": variance,
-                "detail": "BENCH_LOCAL.json",
-            }
-        )
+    print(printed_line(record))
+
+
+def printed_line(record: dict) -> str:
+    """The one printed JSON line: compact (scalars + headline per-query
+    only) so the WHOLE line fits in a 2000-char stdout tail and parses
+    as JSON."""
+    return json.dumps(
+        {
+            "metric": record["metric"],
+            "value": record["value"],
+            "unit": "sec",
+            "sf": record["sf"],
+            "cpus": record["cpus"],
+            "calibration_sec": record["calibration_sec"],
+            "calibration_sec_start": record["calibration_sec_start"],
+            "calibrated_vs_prev_round": record["calibrated_vs_prev_round"],
+            "extended_total": record["extended_total"],
+            "queries": record["queries"],
+            "variance": record["variance"],
+            "detail": "BENCH_LOCAL.json",
+        }
     )
 
 

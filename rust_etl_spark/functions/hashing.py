@@ -27,10 +27,14 @@ from pyspark.sql import functions as F
 HASH_P = 2_147_483_647
 
 
-def md5_long60(col: Column | str) -> Column:
-    """60-bit deterministic hash of a string column (md5 hex prefix)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.conv(F.substring(F.md5(c.cast("string")), 1, 15), 16, 10).cast("long")
+def md5_long60_expr(expr: str) -> str:
+    """Spark SQL: 60-bit deterministic hash of a string column (md5 hex
+    prefix)."""
+    return f"CAST(conv(substring(md5(CAST({expr} AS STRING)), 1, 15), 16, 10) AS BIGINT)"
+
+
+def md5_long60(col: str) -> Column:
+    return F.expr(md5_long60_expr(col))
 
 
 def md5_long60_sql(expr: str) -> str:
@@ -38,13 +42,7 @@ def md5_long60_sql(expr: str) -> str:
     return f"CAST('0x' || substr(md5(CAST({expr} AS VARCHAR)), 1, 15) AS BIGINT)"
 
 
-def universal_hash(h: Column, a: Column | int, b: Column | int) -> Column:
-    """(a * (h % P) + b) % P — overflow-safe in 64-bit on every engine."""
-    a_c = F.lit(a) if isinstance(a, int) else a
-    b_c = F.lit(b) if isinstance(b, int) else b
-    return (a_c * (h % HASH_P) + b_c) % HASH_P
-
-
 def universal_hash_sql(h_expr: str, a_expr: str, b_expr: str) -> str:
-    """DuckDB mirror of :func:`universal_hash`."""
+    """(a * (h % P) + b) % P — overflow-safe in 64-bit on every engine.
+    The text is valid in both Spark SQL and DuckDB."""
     return f"(({a_expr}) * (({h_expr}) % {HASH_P}) + ({b_expr})) % {HASH_P}"

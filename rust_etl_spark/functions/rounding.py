@@ -29,6 +29,13 @@ def round_half_up(col: Column, ndigits: int) -> Column:
     return F.floor(col * F.lit(s) + F.lit(0.5)) / F.lit(s)
 
 
+def round_half_up_expr(expr: str, ndigits: int) -> str:
+    """Spark SQL text of :func:`round_half_up` (double literals: a bare
+    ``100.0`` would parse as DECIMAL in Spark)."""
+    s = float(10 ** ndigits)
+    return f"floor(({expr}) * {s}D + 0.5D) / {s}D"
+
+
 def round_half_up_sql(expr: str, ndigits: int) -> str:
     s = float(10 ** ndigits)
     return f"floor(({expr}) * {s} + 0.5) / {s}"

@@ -4,6 +4,11 @@ Every builder here has an exact DuckDB mirror (the ``*_sql`` strings)
 so text operators stay oracle-verifiable. No Python UDFs: tokenize /
 shingle / ratio logic is all built-in higher-order functions, which
 keeps the hot path inside whole-stage codegen at any scale.
+
+The Spark side is written once, as Spark SQL text (the ``*_expr``
+strings); the Column builders parse it with one ``F.expr`` call. A
+Column tree built from Python operators and lambdas costs one py4j
+round trip per node, and plan build is a fixed cost every query pays.
 """
 
 from __future__ import annotations
@@ -12,11 +17,17 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def tokens(col: Column | str) -> Column:
-    """Lower-cased whitespace tokens; [] for blank text."""
-    c = F.col(col) if isinstance(col, str) else col
-    t = F.trim(F.lower(c))
-    return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(F.split(t, r"\s+"))
+def tokens_expr(expr: str) -> str:
+    """Spark SQL: lower-cased whitespace tokens; [] for blank text."""
+    t = f"trim(lower({expr}))"
+    return (
+        f"CASE WHEN length({t}) = 0 THEN CAST(array() AS array<string>) "
+        f"ELSE split({t}, '\\\\s+') END"
+    )
+
+
+def tokens(col: str) -> Column:
+    return F.expr(tokens_expr(col))
 
 
 def tokens_sql(expr: str) -> str:
@@ -26,24 +37,33 @@ def tokens_sql(expr: str) -> str:
     )
 
 
-def distinct_tokens(col: Column | str) -> Column:
-    return F.array_distinct(tokens(col))
+def distinct_tokens_expr(expr: str) -> str:
+    return f"array_distinct({tokens_expr(expr)})"
+
+
+def distinct_tokens(col: str) -> Column:
+    return F.expr(distinct_tokens_expr(col))
 
 
 def distinct_tokens_sql(expr: str) -> str:
     return f"list_distinct({tokens_sql(expr)})"
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokens(col)).cast("long")
+def token_count_expr(expr: str) -> str:
+    return f"CAST(size({tokens_expr(expr)}) AS BIGINT)"
+
+
+def token_count(col: str) -> Column:
+    return F.expr(token_count_expr(col))
 
 
 def token_count_sql(expr: str) -> str:
     return f"CAST(len({tokens_sql(expr)}) AS BIGINT)"
 
 
-def word_shingles(toks: Column, n: int = 3) -> Column:
-    """n-token shingles ('a b c') of a token array; [] when < n tokens.
+def word_shingles_expr(toks: str, n: int = 3) -> str:
+    """Spark SQL: n-token shingles ('a b c') of a token array; [] when
+    < n tokens.
 
     PERF: pass a *materialized column reference* (select the token
     array into a column first), never the raw ``tokens(text)``
@@ -55,12 +75,16 @@ def word_shingles(toks: Column, n: int = 3) -> Column:
     # whose element_at(toks, 0) then raises INVALID_ARRAY_INDEX_IN_ELEMENT_AT
     # for any doc with < n tokens. Return [] like the SQL mirror's
     # CASE WHEN len(t) < n branch.
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(n)])
+    idx = (
+        f"CASE WHEN size({toks}) >= {n} THEN sequence(1, size({toks}) - {n - 1}) "
+        "ELSE CAST(array() AS array<int>) END"
     )
+    parts = ", ".join(f"element_at({toks}, i + {j})" for j in range(n))
+    return f"transform({idx}, i -> concat_ws(' ', {parts}))"
+
+
+def word_shingles(toks: str, n: int = 3) -> Column:
+    return F.expr(word_shingles_expr(toks, n))
 
 
 def word_shingles_sql(toks_expr: str, n: int = 3) -> str:
@@ -72,13 +96,17 @@ def word_shingles_sql(toks_expr: str, n: int = 3) -> str:
     )
 
 
-def alpha_ratio(col: Column | str) -> Column:
-    """Fraction of characters that are lowercase letters or spaces."""
-    c = F.col(col) if isinstance(col, str) else col
-    low = F.lower(c)
-    return F.when(F.length(c) == 0, F.lit(0.0)).otherwise(
-        F.length(F.regexp_replace(low, "[^a-z ]", "")) / F.length(c)
+def alpha_ratio_expr(expr: str) -> str:
+    """Spark SQL: fraction of characters that are lowercase letters or
+    spaces."""
+    return (
+        f"CASE WHEN length({expr}) = 0 THEN 0.0D "
+        f"ELSE length(regexp_replace(lower({expr}), '[^a-z ]', '')) / length({expr}) END"
     )
+
+
+def alpha_ratio(col: str) -> Column:
+    return F.expr(alpha_ratio_expr(col))
 
 
 def alpha_ratio_sql(expr: str) -> str:

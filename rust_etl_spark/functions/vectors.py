@@ -18,30 +18,39 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def to_double_array(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.transform(c, lambda x: x.cast("double"))
+def to_double_array_expr(expr: str) -> str:
+    return f"transform({expr}, x -> CAST(x AS DOUBLE))"
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Sum of elementwise products, folded left-to-right in double."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+def to_double_array(col: str) -> Column:
+    return F.expr(to_double_array_expr(col))
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+def dot_expr(a: str, b: str) -> str:
+    """Spark SQL: sum of elementwise products, folded left-to-right in
+    double."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
 
 
-def cosine(a: Column, b: Column, ndigits: int = 6) -> Column:
-    """Rounded cosine similarity of two (already double) arrays.
+def norm_expr(a: str) -> str:
+    return f"sqrt(aggregate({a}, 0.0D, (acc, x) -> acc + x * x))"
+
+
+def cosine_expr(a: str, b: str, ndigits: int = 6) -> str:
+    """Spark SQL: rounded cosine similarity of two (already double)
+    arrays.
 
     Portable half-up floor rounding (round-14 sweep): cosine is a
     DERIVED float, and round(double, n) is only empirically portable —
     the floor form agrees across engines by construction (negatives
     round half-toward-+inf identically on both)."""
-    from rust_etl_spark.functions.rounding import round_half_up
+    from rust_etl_spark.functions.rounding import round_half_up_expr
 
-    return round_half_up(dot(a, b) / (norm(a) * norm(b)), ndigits)
+    return round_half_up_expr(f"{dot_expr(a, b)} / ({norm_expr(a)} * {norm_expr(b)})", ndigits)
+
+
+def cosine(a: str, b: str, ndigits: int = 6) -> Column:
+    return F.expr(cosine_expr(a, b, ndigits))
 
 
 def l2sq(a: Column, b: Column, ndigits: int = 6) -> Column:

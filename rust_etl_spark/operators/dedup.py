@@ -29,38 +29,33 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from rust_etl_spark.functions.hashing import (
-    md5_long60,
+    md5_long60_expr,
     md5_long60_sql,
-    universal_hash,
     universal_hash_sql,
 )
 from rust_etl_spark.functions.textfns import (
     distinct_tokens,
+    distinct_tokens_expr,
     distinct_tokens_sql,
     tokens,
+    tokens_expr,
     tokens_sql,
     word_shingles,
+    word_shingles_expr,
     word_shingles_sql,
 )
-from rust_etl_spark.functions.rounding import round_half_up, round_half_up_sql
+from rust_etl_spark.functions.rounding import round_half_up, round_half_up_expr, round_half_up_sql
 from rust_etl_spark.functions.vectors import cosine, cosine_sql, to_double_array
 from rust_etl_spark.plans.catalog import register
 from rust_etl_spark.sources import load_table
 
-def _expand_pairs(members: str, a: str = "doc_a", b: str = "doc_b"):
-    """All ordered pairs (x < y) from a sorted id-array column — in-row
-    expansion, so candidate generation never self-joins (and never
-    recomputes the upstream pipeline for a second join side)."""
-    return F.explode(
-        F.flatten(
-            F.transform(
-                members,
-                lambda x, i: F.transform(
-                    F.slice(F.col(members), i + 2, F.size(members)),
-                    lambda y: F.struct(x.alias(a), y.alias(b)),
-                ),
-            )
-        )
+def _expand_pairs_expr(members: str, a: str = "doc_a", b: str = "doc_b") -> str:
+    """Spark SQL: all ordered pairs (x < y) from a sorted id-array column
+    — in-row expansion, so candidate generation never self-joins (and
+    never recomputes the upstream pipeline for a second join side)."""
+    return (
+        f"explode(flatten(transform({members}, (x, i) -> "
+        f"transform(slice({members}, i + 2, size({members})), y -> struct(x AS {a}, y AS {b})))))"
     )
 
 
@@ -109,6 +104,13 @@ MINHASH_K = 8          #: number of hash functions
 MINHASH_BAND_ROWS = 2  #: rows per band => 4 bands
 
 
+def _token_hashes(docs: DataFrame) -> DataFrame:
+    """(doc_id, th): md5_long60 of each doc's distinct tokens; docs with
+    no tokens are dropped."""
+    toks = docs.select("doc_id", F.expr(f"{distinct_tokens_expr('text')} AS t")).filter("size(t) > 0")
+    return toks.select("doc_id", F.expr(f"transform(t, tok -> {md5_long60_expr('tok')}) AS th"))
+
+
 def minhash_wide(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
     """(doc_id, mh_0..mh_{k-1}): MinHash signature of each doc's
     distinct-token set — ONE map-side projection, zero shuffles.
@@ -119,15 +121,9 @@ def minhash_wide(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
     downstream bucket groupBy. Docs with no tokens are dropped
     (mirrors the explode semantics of the SQL oracle).
     """
-    toks = docs.select("doc_id", distinct_tokens("text").alias("t")).filter(F.size("t") > 0)
-    th = toks.select("doc_id", F.transform("t", md5_long60).alias("th"))
-
-    def uh(i: int):
-        # MUST be a 1-arg lambda: a 2-arg lambda (even via default args)
-        # makes F.transform pass the element *index* as the 2nd arg.
-        return lambda h: universal_hash(h, 1 + 2 * i, 12_345 + 7_919 * i)
-
-    cols = [F.array_min(F.transform("th", uh(i))).alias(f"mh_{i}") for i in range(k)]
+    th = _token_hashes(docs)
+    uh = [universal_hash_sql("h", str(1 + 2 * i), str(12_345 + 7_919 * i)) for i in range(k)]
+    cols = [F.expr(f"array_min(transform(th, h -> {uh[i]})) AS mh_{i}") for i in range(k)]
     return th.select("doc_id", *cols)
 
 
@@ -136,16 +132,13 @@ def minhash_bands(
 ) -> DataFrame:
     """(doc_id, band, sig): banded signature strings — pure projection
     + explode over the wide signature, still no shuffle."""
-    structs = [
-        F.struct(
-            F.lit(b).cast("long").alias("band"),
-            F.concat_ws(
-                ",", *[F.col(f"mh_{i}").cast("string") for i in range(b * band_rows, (b + 1) * band_rows)]
-            ).alias("sig"),
-        )
+    structs = ", ".join(
+        f"struct(CAST({b} AS BIGINT) AS band, concat_ws(',', "
+        + ", ".join(f"CAST(mh_{i} AS STRING)" for i in range(b * band_rows, (b + 1) * band_rows))
+        + ") AS sig)"
         for b in range(k // band_rows)
-    ]
-    return wide.select("doc_id", F.explode(F.array(*structs)).alias("bs")).select(
+    )
+    return wide.select("doc_id", F.expr(f"explode(array({structs})) AS bs")).select(
         "doc_id", "bs.band", "bs.sig"
     )
 
@@ -215,10 +208,10 @@ def minhash_candidate_pairs_df(
     # bounds each member list to MINHASH_MAX_BUCKET.
     buckets = (
         bands.groupBy("band", "sig")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("members"))
-        .filter((F.size("members") >= 2) & (F.size("members") <= MINHASH_MAX_BUCKET))
+        .agg(F.expr("sort_array(collect_list(doc_id)) AS members"))
+        .filter(f"size(members) >= 2 AND size(members) <= {MINHASH_MAX_BUCKET}")
     )
-    pairs = buckets.select(_expand_pairs("members").alias("p"))
+    pairs = buckets.select(F.expr(f"{_expand_pairs_expr('members')} AS p"))
     return pairs.select("p.doc_a", "p.doc_b").distinct()
 
 
@@ -512,52 +505,43 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE-splittable at 100 TB; per-list width stays bounded by the
     df-cap.
     """
-    docs = load_table(spark, sf_dir, "documents")
+    jac = "n_common / (na + nb - n_common)"
+    return (
+        _shingle_pair_counts(load_table(spark, sf_dir, "documents"))
+        .filter(f"{jac} >= {JACCARD_THRESHOLD}D")
+        .select("doc_a", "doc_b", F.expr(f"{round_half_up_expr(jac, 4)} AS jaccard"))
+    )
+
+
+def _shingle_pair_counts(docs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, na, nb, n_common) over the df-capped hashed
+    shingle sets: the posting-list dataflow shared by Jaccard and
+    containment dedup."""
     # Materialize the token array before shingling (see word_shingles PERF note).
-    toks = docs.select("doc_id", tokens("text").alias("t"))
+    toks = docs.select("doc_id", F.expr(f"{tokens_expr('text')} AS t"))
     sh_all = toks.select(
         "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.transform(word_shingles(F.col("t"), JACCARD_SHINGLE_N), md5_long60)
-            )
-        ).alias("sh"),
+        F.expr(
+            f"explode(array_distinct(transform({word_shingles_expr('t', JACCARD_SHINGLE_N)}, "
+            f"s -> {md5_long60_expr('s')}))) AS sh"
+        ),
     )
-    capped = sh_all.withColumn(
-        "df", F.count(F.lit(1)).over(Window.partitionBy("sh"))
-    ).filter(F.col("df") <= JACCARD_DF_CAP)
-    sized = capped.withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
+    capped = sh_all.withColumn("df", F.expr("count(1) OVER (PARTITION BY sh)")).filter(
+        f"df <= {JACCARD_DF_CAP}"
+    )
+    sized = capped.withColumn("n", F.expr("count(1) OVER (PARTITION BY doc_id)"))
     members = (
         sized.groupBy("sh")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "n"))).alias("ms"))
-        .filter(F.size("ms") >= 2)
+        .agg(F.expr("sort_array(collect_list(struct(doc_id, n))) AS ms"))
+        .filter("size(ms) >= 2")
     )
     pairs = members.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "ms",
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ms"), i + 2, F.size("ms")),
-                        lambda y: F.struct(
-                            x["doc_id"].alias("doc_a"),
-                            x["n"].alias("na"),
-                            y["doc_id"].alias("doc_b"),
-                            y["n"].alias("nb"),
-                        ),
-                    ),
-                )
-            )
-        ).alias("p")
+        F.expr(
+            "explode(flatten(transform(ms, (x, i) -> transform(slice(ms, i + 2, size(ms)), "
+            "y -> struct(x.doc_id AS doc_a, x.n AS na, y.doc_id AS doc_b, y.n AS nb))))) AS p"
+        )
     )
-    inter = pairs.groupBy("p.doc_a", "p.doc_b", "p.na", "p.nb").agg(
-        F.count(F.lit(1)).alias("n_common")
-    )
-    jac = F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
-    return (
-        inter.filter(jac >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", round_half_up(jac, 4).alias("jaccard"))
-    )
+    return pairs.groupBy("p.doc_a", "p.doc_b", "p.na", "p.nb").agg(F.expr("count(1) AS n_common"))
 
 
 # ------------------------------------------------------------- simhash
@@ -648,9 +632,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_simhash_kernel_contract.py.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", distinct_tokens("text").alias("t")).filter(F.size("t") > 0)
-    th = toks.select("doc_id", F.transform("t", md5_long60).alias("th"))
-    return th.mapInPandas(_simhash_batches(), "doc_id long, simhash long")
+    return _token_hashes(docs).mapInPandas(_simhash_batches(), "doc_id long, simhash long")
 
 
 MINHASH_VERIFY_TAU = 0.8
@@ -926,7 +908,7 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "n_chars", alpha_ratio("text").alias("alpha"), tokens("text").alias("t")
     )
     scored = base.select(
-        "doc_id", "lang", "n_chars", quality_expr(F.col("t"), F.col("alpha")).alias("quality")
+        "doc_id", "lang", "n_chars", quality_expr("t", F.col("alpha")).alias("quality")
     )
     non_keepers = dedup_clusters(spark, sf_dir).filter(F.col("doc_id") != F.col("cluster_id"))
     return (
@@ -1007,7 +989,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = emb.select(F.col("vec_id").alias("vec_a"), "blk", F.col("v").alias("va"))
     b = emb.select(F.col("vec_id").alias("vec_b"), "blk", F.col("v").alias("vb"))
     pairs = a.join(b.hint("shuffle_hash"), "blk").filter(F.col("vec_a") < F.col("vec_b"))
-    score = cosine(F.col("va"), F.col("vb"))
+    score = cosine("va", "vb")
     return pairs.select("vec_a", "vec_b", score.alias("score")).filter(
         F.col("score") >= COSINE_NEARDUP_TAU
     )
@@ -1175,50 +1157,11 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Jaccard pass, so a curation run gets both signals from what
     can be one shared candidate stage.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", tokens("text").alias("t"))
-    sh_all = toks.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.transform(word_shingles(F.col("t"), JACCARD_SHINGLE_N), md5_long60)
-            )
-        ).alias("sh"),
-    )
-    capped = sh_all.withColumn(
-        "df", F.count(F.lit(1)).over(Window.partitionBy("sh"))
-    ).filter(F.col("df") <= JACCARD_DF_CAP)
-    sized = capped.withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
-    members = (
-        sized.groupBy("sh")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "n"))).alias("ms"))
-        .filter(F.size("ms") >= 2)
-    )
-    pairs = members.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "ms",
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ms"), i + 2, F.size("ms")),
-                        lambda y: F.struct(
-                            x["doc_id"].alias("doc_a"),
-                            x["n"].alias("na"),
-                            y["doc_id"].alias("doc_b"),
-                            y["n"].alias("nb"),
-                        ),
-                    ),
-                )
-            )
-        ).alias("p")
-    )
-    inter = pairs.groupBy("p.doc_a", "p.doc_b", "p.na", "p.nb").agg(
-        F.count(F.lit(1)).alias("n_common")
-    )
-    cont = F.col("n_common") / F.least("na", "nb")
+    cont = "n_common / least(na, nb)"
     return (
-        inter.filter(cont >= CONTAINMENT_TAU)
-        .select("doc_a", "doc_b", round_half_up(cont, 4).alias("containment"))
+        _shingle_pair_counts(load_table(spark, sf_dir, "documents"))
+        .filter(f"{cont} >= {CONTAINMENT_TAU}D")
+        .select("doc_a", "doc_b", F.expr(f"{round_half_up_expr(cont, 4)} AS containment"))
     )
 
 
@@ -1443,7 +1386,7 @@ def corpus_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("t"))
     per = (
-        toks.select("doc_id", F.explode(word_shingles(F.col("t"), 3)).alias("s"))
+        toks.select("doc_id", F.explode(word_shingles("t", 3)).alias("s"))
         .distinct()
     )
     first_seen = per.groupBy("s").agg(F.min("doc_id").alias("first_doc"))

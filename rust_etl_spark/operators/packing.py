@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from rust_etl_spark.functions.hashing import md5_long60
 from rust_etl_spark.functions.textfns import token_count
@@ -59,7 +58,7 @@ def pack_sequences_df(
         pdf["bin_id"] = bins
         return pdf[["doc_id", "bucket", "bin_id", "n_tokens"]]
 
-    h = md5_long60(F.col("doc_id"))
+    h = md5_long60("doc_id")
     prepared = docs.select(
         "doc_id",
         (h % n_buckets).alias("bucket"),

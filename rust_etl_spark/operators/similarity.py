@@ -36,11 +36,13 @@ from rust_etl_spark.functions.hashing import md5_long60_sql
 from rust_etl_spark.functions.rounding import round_half_up
 from rust_etl_spark.functions.vectors import (
     cosine,
+    cosine_expr,
     cosine_sql,
     l2sq,
     l2sq_rhu_sql,
     l2sq_sql,
     to_double_array,
+    to_double_array_expr,
 )
 from rust_etl_spark.plans.catalog import register
 from rust_etl_spark.sources import load_table, table_rows
@@ -208,15 +210,13 @@ _TOPK_ORACLE = f"""
 )
 def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        to_double_array("embedding").alias("qv")
-    )
+    q = emb.filter(f"vec_id = {QUERY_VEC_ID}").select(F.expr(f"{to_double_array_expr('embedding')} AS qv"))
     return (
-        emb.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .select("vec_id", "label", to_double_array("embedding").alias("v"))
+        emb.filter(f"vec_id != {QUERY_VEC_ID}")
+        .select("vec_id", "label", F.expr(f"{to_double_array_expr('embedding')} AS v"))
         .crossJoin(F.broadcast(q))
-        .select("vec_id", "label", cosine(F.col("v"), F.col("qv")).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("vec_id"))
+        .select("vec_id", "label", F.expr(f"{cosine_expr('v', 'qv')} AS score"))
+        .orderBy(F.desc("score"), "vec_id")
         .limit(TOPK)
     )
 
@@ -407,33 +407,22 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # predicate reaches the parquet scan — with the filter ABOVE the
     # opaque mapInPandas the qb branch would re-run the kernel over
     # the whole table (guide §4.2: opaque functions defeat pushdown).
-    qb = lsh_buckets(spark, emb.filter(F.col("vec_id") == QUERY_VEC_ID)).select(
-        F.col("bucket").alias("qbucket")
-    )
-    probes = qb.select(
-        F.explode(
-            F.array(
-                F.col("qbucket"),
-                *[
-                    F.col("qbucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-                    for i in range(N_PLANES)
-                ],
-            )
-        ).alias("qbucket")
-    )
+    qb = lsh_buckets(spark, emb.filter(f"vec_id = {QUERY_VEC_ID}")).select(F.expr("bucket AS qbucket"))
+    flips = ", ".join(f"qbucket ^ CAST({1 << i} AS BIGINT)" for i in range(N_PLANES))
+    probes = qb.select(F.expr(f"explode(array(qbucket, {flips})) AS qbucket"))
     cand = (
-        buckets.join(F.broadcast(probes), F.col("bucket") == F.col("qbucket"))
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
+        buckets.join(F.broadcast(probes), F.expr("bucket = qbucket"))
+        .filter(f"vec_id != {QUERY_VEC_ID}")
         .select("vec_id")
         .distinct()
     )
-    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(to_double_array("embedding").alias("qv"))
+    q = emb.filter(f"vec_id = {QUERY_VEC_ID}").select(F.expr(f"{to_double_array_expr('embedding')} AS qv"))
     return (
         emb.join(cand, "vec_id")
-        .select("vec_id", to_double_array("embedding").alias("v"))
+        .select("vec_id", F.expr(f"{to_double_array_expr('embedding')} AS v"))
         .crossJoin(F.broadcast(q))
-        .select("vec_id", cosine(F.col("v"), F.col("qv")).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("vec_id"))
+        .select("vec_id", F.expr(f"{cosine_expr('v', 'qv')} AS score"))
+        .orderBy(F.desc("score"), "vec_id")
         .limit(TOPK)
     )
 
@@ -1026,7 +1015,7 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.join(cand, "vec_id")
         .select("vec_id", to_double_array("embedding").alias("v"))
         .crossJoin(F.broadcast(q))
-        .select("vec_id", cosine(F.col("v"), F.col("qv")).alias("score"))
+        .select("vec_id", cosine("v", "qv").alias("score"))
         .orderBy(F.col("score").desc(), F.col("vec_id"))
         .limit(TOPK)
     )

@@ -12,13 +12,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rust_etl_spark.functions.rounding import round_half_up, round_half_up_sql
+from rust_etl_spark.functions.rounding import round_half_up, round_half_up_expr, round_half_up_sql
 from rust_etl_spark.functions.textfns import (
     alpha_ratio,
+    alpha_ratio_expr,
     alpha_ratio_sql,
     token_count,
+    token_count_expr,
     token_count_sql,
     tokens,
+    tokens_expr,
     tokens_sql,
 )
 from rust_etl_spark.plans.catalog import register
@@ -38,9 +41,10 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
 LANG_ORDER = ("en", "es", "de", "fr", "zh")
 
 
-def stopword_hits(toks: Column, words: tuple[str, ...]) -> Column:
-    """# tokens (with multiplicity) found in ``words``."""
-    return F.size(F.filter(toks, lambda t: t.isin(*words))).cast("long")
+def stopword_hits_expr(toks: str, words: tuple[str, ...]) -> str:
+    """Spark SQL: # tokens (with multiplicity) found in ``words``."""
+    lits = ", ".join(f"'{w}'" for w in words)
+    return f"CAST(size(filter({toks}, w -> w IN ({lits}))) AS BIGINT)"
 
 
 def stopword_hits_sql(toks_expr: str, words: tuple[str, ...]) -> str:
@@ -48,44 +52,31 @@ def stopword_hits_sql(toks_expr: str, words: tuple[str, ...]) -> str:
     return f"CAST(len(list_filter({toks_expr}, t -> t IN ({lits}))) AS BIGINT)"
 
 
-def argmax_lang(hits: dict[str, Column]) -> Column:
-    """Argmax over per-language evidence columns, fixed tie-break order.
+def argmax_lang_expr(hits: dict[str, str]) -> str:
+    """Argmax over per-language evidence expressions, fixed tie-break
+    order. The CASE text is valid in both Spark SQL and DuckDB.
 
     PERF: pass *materialized columns* (select the hit counts first) —
     inlined hit expressions get re-evaluated for every comparison in
     the CASE chain (~40x per row).
     """
-    pred = F.lit(LANG_ORDER[0])
-    expr = None
+    whens = []
     for lang in LANG_ORDER:
         cond = None
         for other in LANG_ORDER:
             if other == lang:
                 continue
             # strictly-greater for later langs, >= for earlier => stable argmax
-            c = hits[lang] >= hits[other] if LANG_ORDER.index(other) > LANG_ORDER.index(lang) else hits[lang] > hits[other]
-            cond = c if cond is None else (cond & c)
-        expr = F.when(cond, F.lit(lang)) if expr is None else expr.when(cond, F.lit(lang))
-    return expr.otherwise(pred)
-
-
-def predict_lang(toks: Column) -> Column:
-    """Argmax of stopword evidence over a token-array column."""
-    return argmax_lang({lang: stopword_hits(toks, STOPWORDS[lang]) for lang in LANG_ORDER})
+            op = ">=" if LANG_ORDER.index(other) > LANG_ORDER.index(lang) else ">"
+            c = f"({hits[lang]}) {op} ({hits[other]})"
+            # left-deep AND: Spark's parser would balance a flat chain
+            cond = c if cond is None else f"({cond} AND {c})"
+        whens.append(f"WHEN {cond} THEN '{lang}'")
+    return f"CASE {' '.join(whens)} ELSE '{LANG_ORDER[0]}' END"
 
 
 def predict_lang_sql(toks_expr: str) -> str:
-    hit = {lang: stopword_hits_sql(toks_expr, STOPWORDS[lang]) for lang in LANG_ORDER}
-    whens = []
-    for lang in LANG_ORDER:
-        conds = []
-        for other in LANG_ORDER:
-            if other == lang:
-                continue
-            op = ">=" if LANG_ORDER.index(other) > LANG_ORDER.index(lang) else ">"
-            conds.append(f"({hit[lang]}) {op} ({hit[other]})")
-        whens.append(f"WHEN {' AND '.join(conds)} THEN '{lang}'")
-    return f"CASE {' '.join(whens)} ELSE '{LANG_ORDER[0]}' END"
+    return argmax_lang_expr({lang: stopword_hits_sql(toks_expr, STOPWORDS[lang]) for lang in LANG_ORDER})
 
 
 @register(
@@ -114,18 +105,16 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     feat = docs.select(
         "lang",
         "n_chars",
-        token_count("text").alias("n_tok"),
-        F.floor(alpha_ratio("text") * F.lit(1e6) + F.lit(0.5)).cast("long").alias("alpha6"),
+        F.expr(f"{token_count_expr('text')} AS n_tok"),
+        F.expr(f"CAST(floor({alpha_ratio_expr('text')} * 1000000.0D + 0.5D) AS BIGINT) AS alpha6"),
     )
-    n = F.count(F.lit(1))
-    return (
-        feat.groupBy("lang")
-        .agg(
-            n.alias("n_docs"),
-            round_half_up(F.sum("n_chars").cast("long") / (n * F.lit(1.0)), 2).alias("avg_chars"),
-            round_half_up(F.sum("n_tok").cast("long") / (n * F.lit(1.0)), 2).alias("avg_tokens"),
-            round_half_up(F.sum("alpha6").cast("long") / (n * F.lit(1e6)), 4).alias("avg_alpha"),
-        )
+    return feat.groupBy("lang").agg(
+        F.expr("count(1) AS n_docs"),
+        F.expr(f"{round_half_up_expr('CAST(sum(n_chars) AS BIGINT) / (count(1) * 1.0D)', 2)} AS avg_chars"),
+        F.expr(f"{round_half_up_expr('CAST(sum(n_tok) AS BIGINT) / (count(1) * 1.0D)', 2)} AS avg_tokens"),
+        F.expr(
+            f"{round_half_up_expr('CAST(sum(alpha6) AS BIGINT) / (count(1) * 1000000.0D)', 4)} AS avg_alpha"
+        ),
     )
 
 
@@ -162,16 +151,16 @@ def token_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.col("lang").alias("lang_label"), tokens("text").alias("t"))
+    toks = docs.select("doc_id", F.expr("lang AS lang_label"), F.expr(f"{tokens_expr('text')} AS t"))
     hits = toks.select(
         "doc_id",
         "lang_label",
-        *[stopword_hits(F.col("t"), STOPWORDS[lang]).alias(f"h_{lang}") for lang in LANG_ORDER],
+        *[F.expr(f"{stopword_hits_expr('t', STOPWORDS[lang])} AS h_{lang}") for lang in LANG_ORDER],
     )
     return hits.select(
         "doc_id",
         "lang_label",
-        argmax_lang({lang: F.col(f"h_{lang}") for lang in LANG_ORDER}).alias("lang_pred"),
+        F.expr(f"{argmax_lang_expr({lang: f'h_{lang}' for lang in LANG_ORDER})} AS lang_pred"),
     )
 
 
@@ -181,14 +170,14 @@ _QUALITY_SQL = f"""0.4 * least({token_count_sql('text')} / 100.0, 1.0)
                  + 0.3 * ({alpha_ratio_sql('text')})"""
 
 
-def quality_expr(t: Column, alpha: Column) -> Column:
-    """Composite quality over a materialized token array + alpha ratio,
-    rounded portably (round_half_up — engine round() diverges on
-    boundary doubles; see functions/rounding.py)."""
+def quality_expr(t: str, alpha: Column) -> Column:
+    """Composite quality over a materialized token-array column (named
+    ``t``) + alpha ratio, rounded portably (round_half_up — engine
+    round() diverges on boundary doubles; see functions/rounding.py)."""
     n_tok = F.size(t).cast("long")
     score = (
         0.4 * F.least(n_tok / 100.0, F.lit(1.0))
-        + 0.3 * (stopword_hits(t, STOPWORDS["en"]) / F.greatest(n_tok, F.lit(1)))
+        + 0.3 * (F.expr(stopword_hits_expr(t, STOPWORDS["en"])) / F.greatest(n_tok, F.lit(1)))
         + 0.3 * alpha
     )
     return round_half_up(score, 4)
@@ -207,7 +196,7 @@ def quality_expr(t: Column, alpha: Column) -> Column:
 def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", alpha_ratio("text").alias("alpha"), tokens("text").alias("t"))
-    return base.select("doc_id", quality_expr(F.col("t"), F.col("alpha")).alias("quality"))
+    return base.select("doc_id", quality_expr("t", F.col("alpha")).alias("quality"))
 
 
 #: BPE-style pre-tokenizer pattern (GPT-2-shaped, simplified): English
@@ -425,7 +414,7 @@ def repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("t"))
-    g = toks.select("doc_id", F.explode(word_shingles(F.col("t"), 2)).alias("gram"))
+    g = toks.select("doc_id", F.explode(word_shingles("t", 2)).alias("gram"))
     c = g.groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("cnt"))
     return c.groupBy("doc_id").agg(
         F.sum("cnt").alias("n_grams"),
@@ -492,15 +481,15 @@ def doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_winnow_kernel_contract.py. Still zero shuffle
     (plan-locked in test_plans.py).
     """
-    from rust_etl_spark.functions.hashing import md5_long60
+    from rust_etl_spark.functions.hashing import md5_long60_expr
     from rust_etl_spark.functions.textfns import word_shingles
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("t"))
     # Materialize grams, then hashes, before the window fold (see the
     # word_shingles PERF note: no CSE across lambda re-evaluations).
-    grams = toks.select("doc_id", word_shingles(F.col("t"), WINNOW_K).alias("g"))
-    hashed = grams.select("doc_id", F.transform("g", md5_long60).alias("hs"))
+    grams = toks.select("doc_id", word_shingles("t", WINNOW_K).alias("g"))
+    hashed = grams.select("doc_id", F.expr(f"transform(g, s -> {md5_long60_expr('s')}) AS hs"))
     return hashed.mapInPandas(_winnow_batches(), "doc_id long, fp long")
 
 
@@ -575,7 +564,7 @@ def ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(tokens("text").alias("t"))
-    grams = toks.select(F.explode(word_shingles(F.col("t"), NGRAM_FREQ_N)).alias("gram"))
+    grams = toks.select(F.explode(word_shingles("t", NGRAM_FREQ_N)).alias("gram"))
     return (
         grams.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -753,14 +742,14 @@ def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     mwl = F.when(n == 0, F.lit(0.0)).otherwise(
         F.aggregate(F.transform("t", F.length), F.lit(0).cast("long"), lambda a, x: a + x) / n
     )
-    hits = {lang: stopword_hits(F.col("t"), STOPWORDS[lang]) for lang in LANG_ORDER}
+    hits = {lang: stopword_hits_expr("t", STOPWORDS[lang]) for lang in LANG_ORDER}
     m = base.select(
         "doc_id",
         "lang",
         n.cast("long").alias("n_words"),
         mwl.alias("mwl"),
-        quality_expr(F.col("t"), F.col("alpha")).alias("quality"),
-        argmax_lang(hits).alias("pred"),
+        quality_expr("t", F.col("alpha")).alias("quality"),
+        F.expr(f"{argmax_lang_expr(hits)} AS pred"),
     )
     reason = (
         F.when(F.col("n_words") < GOPHER_MIN_WORDS, "too_short")
@@ -796,10 +785,10 @@ def lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", "lang", tokens("text").alias("t"))
     hits = base.select(
-        "lang", *[stopword_hits(F.col("t"), STOPWORDS[lang]).alias(f"h_{lang}") for lang in LANG_ORDER]
+        "lang", *[F.expr(f"{stopword_hits_expr('t', STOPWORDS[lang])} AS h_{lang}") for lang in LANG_ORDER]
     )
-    pred = argmax_lang({lang: F.col(f"h_{lang}") for lang in LANG_ORDER})
-    return hits.select("lang", pred.alias("pred")).groupBy("lang", "pred").agg(
+    pred = argmax_lang_expr({lang: f"h_{lang}" for lang in LANG_ORDER})
+    return hits.select("lang", F.expr(f"{pred} AS pred")).groupBy("lang", "pred").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
 

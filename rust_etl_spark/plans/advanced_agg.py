@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from rust_etl_spark.functions.money import O_TOTALPRICE_CENTS as _O_CENTS
-from rust_etl_spark.functions.rounding import round_half_up, round_half_up_sql
+from rust_etl_spark.functions.rounding import round_half_up, round_half_up_expr, round_half_up_sql
 from rust_etl_spark.plans.catalog import register
 from rust_etl_spark.sources import load_table
 
@@ -87,37 +87,40 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single global ordering.
     """
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    w = F.lit(RANGE_FRAME_W)
-    bkt = lambda v: F.floor(v / w).cast("long")  # noqa: E731
+    w = f"{RANGE_FRAME_W!r}D"
+
+    def bkt(v: str) -> str:
+        return f"CAST(floor(({v}) / {w}) AS BIGINT)"
+
+    def running(expr: str, order: str) -> str:
+        return (
+            f"{expr} OVER (PARTITION BY b ORDER BY {order} "
+            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+        )
 
     # 1. distinct values with in-bucket prefix count/sum.
     # the summed metric is exact integer cents (functions/money.py,
     # round-13 class migration): the decomposed prefix sums reassociate
     # the reduction vs the oracle's sequential window accumulation,
     # which is exactly where a double sum's low bits diverge
-    g = (
-        o.groupBy(bkt(F.col("o_totalprice")).alias("b"), F.col("o_totalprice").alias("v"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum(F.expr(_O_CENTS)).alias("s"))
+    g = o.groupBy(F.expr(f"{bkt('o_totalprice')} AS b"), F.expr("o_totalprice AS v")).agg(
+        F.expr("count(1) AS n"), F.expr(f"sum({_O_CENTS}) AS s")
     )
-    wc = Window.partitionBy("b").orderBy("v").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     idx = g.select(
-        "b", "v", F.sum("n").over(wc).alias("cn"), F.sum("s").over(wc).alias("cs")
+        "b", "v", F.expr(f"{running('sum(n)', 'v')} AS cn"), F.expr(f"{running('sum(s)', 'v')} AS cs")
     )
 
     # 2. densified bucket offsets (tiny: one row per W-wide slice of the
     # value domain). Triangular join instead of a global window keeps
     # the plan free of single-partition stages.
-    btot = g.groupBy("b").agg(F.sum("n").alias("tn"), F.sum("s").alias("ts"))
-    lo_hi = btot.agg(F.min("b").alias("lo"), F.max("b").alias("hi"))
-    dense = lo_hi.select(F.explode(F.sequence("lo", "hi")).alias("b"))
+    btot = g.groupBy("b").agg(F.expr("sum(n) AS tn"), F.expr("sum(s) AS ts"))
+    lo_hi = btot.agg(F.expr("min(b) AS lo"), F.expr("max(b) AS hi"))
+    dense = lo_hi.select(F.expr("explode(sequence(lo, hi)) AS b"))
     a, t = dense.alias("a"), btot.alias("t")
     boff = (
-        a.join(F.broadcast(t), F.col("t.b") < F.col("a.b"), "left")
-        .groupBy(F.col("a.b").alias("b"))
-        .agg(
-            F.coalesce(F.sum("t.tn"), F.lit(0)).alias("off_n"),
-            F.coalesce(F.sum("t.ts"), F.lit(0)).alias("off_s"),
-        )
+        a.join(F.broadcast(t), F.expr("t.b < a.b"), "left")
+        .groupBy(F.expr("a.b AS b"))
+        .agg(F.expr("coalesce(sum(t.tn), 0) AS off_n"), F.expr("coalesce(sum(t.ts), 0) AS off_s"))
     )
 
     # 3. endpoint lookups — PER DISTINCT PRICE, not per order row
@@ -134,42 +137,26 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (bit-identical join keys: v comes from the same column through
     # groupBy). Per anchor price an inclusive anchor at p (+1 *
     # G(<= p)) and an exclusive probe at p - W (-1 * G(< p - W)):
-    p = F.col("av")
-    anchors = g.select(F.col("v").alias("av"))
+    anchors = g.select(F.expr("v AS av"))
     lookups = anchors.select(
         "av",
-        F.explode(
-            F.array(
-                F.struct(
-                    bkt(p).alias("b"),
-                    p.alias("v"),
-                    F.lit(2).alias("kind"),
-                    F.lit(1).alias("sign"),
-                ),
-                F.struct(
-                    bkt(p - w).alias("b"),
-                    (p - w).alias("v"),
-                    F.lit(0).alias("kind"),
-                    F.lit(-1).alias("sign"),
-                ),
-            )
-        ).alias("e"),
+        F.expr(
+            f"explode(array(struct({bkt('av')} AS b, av AS v, 2 AS kind, 1 AS sign), "
+            f"struct({bkt(f'av - {w}')} AS b, av - {w} AS v, 0 AS kind, -1 AS sign))) AS e"
+        ),
     ).select("av", "e.b", "e.v", "e.kind", "e.sign")
-    union = idx.withColumn("kind", F.lit(1)).unionByName(lookups, allowMissingColumns=True)
-    wl = Window.partitionBy("b").orderBy("v", "kind").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
+    union = idx.withColumn("kind", F.expr("1")).unionByName(lookups, allowMissingColumns=True)
     looked = (
-        union.withColumn("lcn", F.last("cn", ignorenulls=True).over(wl))
-        .withColumn("lcs", F.last("cs", ignorenulls=True).over(wl))
-        .filter(F.col("kind") != 1)
+        union.withColumn("lcn", F.expr(running("last(cn, true)", "v, kind")))
+        .withColumn("lcs", F.expr(running("last(cs, true)", "v, kind")))
+        .filter("kind != 1")
     )
     resolved = looked.join(F.broadcast(boff), "b", "left")
-    part_n = F.col("sign") * (F.coalesce("lcn", F.lit(0)) + F.coalesce("off_n", F.lit(0)))
-    part_s = F.col("sign") * (F.coalesce("lcs", F.lit(0)) + F.coalesce("off_s", F.lit(0)))
+    part_n = "sign * (coalesce(lcn, 0) + coalesce(off_n, 0))"
+    part_s = "sign * (coalesce(lcs, 0) + coalesce(off_s, 0))"
     per_price = resolved.groupBy("av").agg(
-        F.sum(part_n).cast("bigint").alias("n_near"),
-        round_half_up(F.sum(part_s).cast("bigint") / F.lit(100.0), 2).alias("sum_near"),
+        F.expr(f"CAST(sum({part_n}) AS BIGINT) AS n_near"),
+        F.expr(f"{round_half_up_expr(f'CAST(sum({part_s}) AS BIGINT) / 100.0D', 2)} AS sum_near"),
     )
     # Join-back: shuffle_hash hinted with PER_PRICE (domain-bounded,
     # 1% of rows) as the build side. Unhinted, the gate's misbroadcast
@@ -178,7 +165,7 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round's re-plan was supposed to avoid (its 2-column estimate
     # sits under the threshold at small/mid tiers). SMJ on the price
     # double is the spill-safe fallback.
-    return o.join(per_price.hint("shuffle_hash"), o.o_totalprice == per_price.av).select(
+    return o.join(per_price.hint("shuffle_hash"), F.expr("o_totalprice = av")).select(
         "o_orderkey", "o_totalprice", "n_near", "sum_near"
     )
 

@@ -41,7 +41,7 @@ STRATIFIED_QUOTA = 20
 )
 def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang").orderBy(md5_long60(F.col("doc_id")), F.col("doc_id"))
+    w = Window.partitionBy("lang").orderBy(md5_long60("doc_id"), F.col("doc_id"))
     return (
         docs.select("doc_id", "lang", "n_chars")
         .withColumn("rn", F.row_number().over(w).cast("long"))
@@ -107,7 +107,7 @@ def dataset_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     pct = F.lit(0)
     for k, v in MIX_PCT.items():
         pct = F.when(F.col("lang") == k, F.lit(v)).otherwise(pct)
-    return docs.filter(md5_long60(F.col("doc_id")) % 100 < pct).select(
+    return docs.filter(md5_long60("doc_id") % 100 < pct).select(
         "doc_id", "lang", "source"
     )
 
@@ -237,7 +237,7 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arm names it but explodes with explode_outer, for which no size
     # filter is inferred (round 16 — see docstring).
     shingle_arr = lambda: F.array_distinct(  # noqa: E731
-        word_shingles(F.col("t"), DECON_NGRAM)
+        word_shingles("t", DECON_NGRAM)
     )
     ev = (
         toks.filter(F.col("doc_id") % DECON_EVAL_MOD == 0)
@@ -299,7 +299,7 @@ SHUFFLE_BUCKETS = 32
 )
 def shuffle_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    h = md5_long60(F.col("doc_id"))
+    h = md5_long60("doc_id")
     w = Window.partitionBy(F.col("bucket")).orderBy(F.col("h"), F.col("doc_id"))
     return (
         docs.select("doc_id", h.alias("h"), (h % SHUFFLE_BUCKETS).alias("bucket"))
@@ -451,7 +451,7 @@ SPLIT_PCT = {"train": 80, "val": 10, "test": 10}  # documented; thresholds below
 )
 def dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    h = md5_long60(F.col("doc_id")) % 100
+    h = md5_long60("doc_id") % 100
     split = (
         F.when(h < 80, "train").when(h < 90, "val").otherwise("test")
     )

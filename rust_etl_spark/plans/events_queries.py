@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from rust_etl_spark.functions.money import VALUE_CENTS as _V_CENTS
-from rust_etl_spark.functions.rounding import round_half_up, round_half_up_sql
+from rust_etl_spark.functions.rounding import round_half_up, round_half_up_expr, round_half_up_sql
 from rust_etl_spark.plans.catalog import register
 from rust_etl_spark.sources import load_table
 
@@ -43,15 +43,22 @@ def _total_value_sql() -> str:
     return round_half_up_sql(f"{_V_SUM_SQL} / 100.0", 2)
 
 
+_TOTAL_VALUE_EXPR = round_half_up_expr(f"{_V_SUM_SQL} / 100.0D", 2)
+
+
 def _total_value_col() -> F.Column:
-    return round_half_up(F.sum(F.expr(_V_CENTS)).cast("long") / F.lit(100.0), 2)
+    return F.expr(_TOTAL_VALUE_EXPR)
+
+
+def ntz_epoch_us_expr(col: str) -> str:
+    """Spark SQL: epoch micros of a TIMESTAMP_NTZ column, independent of
+    session time zone (``unix_micros`` only accepts LTZ; an NTZ->LTZ
+    cast would shift by the session's zone)."""
+    return f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', {col})"
 
 
 def ntz_epoch_us(col: str):
-    """Epoch micros of a TIMESTAMP_NTZ column, independent of session
-    time zone (``unix_micros`` only accepts LTZ; an NTZ->LTZ cast
-    would shift by the driver session's zone)."""
-    return F.expr(f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', {col})")
+    return F.expr(ntz_epoch_us_expr(col))
 
 
 @register(
@@ -70,14 +77,9 @@ def ntz_epoch_us(col: str):
 def events_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return (
-        ev.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), _total_value_col().alias("total_value"))
-        .select(
-            F.unix_micros("w.start").alias("w_start_us"),
-            "event_type",
-            "n",
-            "total_value",
-        )
+        ev.groupBy(F.expr("window(ts, '5 minutes') AS w"), "event_type")
+        .agg(F.expr("count(1) AS n"), F.expr(f"{_TOTAL_VALUE_EXPR} AS total_value"))
+        .select(F.expr("unix_micros(w.start) AS w_start_us"), "event_type", "n", "total_value")
     )
 
 
@@ -149,21 +151,19 @@ def events_hop_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_id", "value", "ts_ns")
-    w = Window.partitionBy("user_id").orderBy("ts_ns", "event_id")
-    marked = ev.withColumn("prev_ns", F.lag("ts_ns").over(w)).withColumn(
+    w = "PARTITION BY user_id ORDER BY ts_ns, event_id"
+    marked = ev.withColumn("prev_ns", F.expr(f"lag(ts_ns) OVER ({w})")).withColumn(
         "is_new",
-        F.when(F.col("prev_ns").isNull() | (F.col("ts_ns") - F.col("prev_ns") > SESSION_GAP_NS), 1).otherwise(0),
+        F.expr(f"CASE WHEN prev_ns IS NULL OR ts_ns - prev_ns > {SESSION_GAP_NS} THEN 1 ELSE 0 END"),
     )
     numbered = marked.withColumn(
-        "session_seq", F.sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        "session_seq",
+        F.expr(f"sum(is_new) OVER ({w} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"),
     )
-    return (
-        numbered.groupBy("user_id", "session_seq")
-        .agg(
-            F.expr("min(ts_ns) div 1000").alias("session_start_us"),
-            F.count(F.lit(1)).alias("n_events"),
-            _total_value_col().alias("total_value"),
-        )
+    return numbered.groupBy("user_id", "session_seq").agg(
+        F.expr("min(ts_ns) div 1000 AS session_start_us"),
+        F.expr("count(1) AS n_events"),
+        F.expr(f"{_TOTAL_VALUE_EXPR} AS total_value"),
     )
 
 
@@ -247,24 +247,15 @@ def events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     union itself: the events arm of THIS shape rides a user_id-
     bucketed layout exchange-free (BUCKETED_BENCH events_user family).
     """
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", F.expr("ts_ns div 1000").alias("t_us"), "event_id"
-    )
+    ev = load_table(spark, sf_dir, "events").select("user_id", F.expr("ts_ns div 1000 AS t_us"), "event_id")
     arrs = (
         load_table(spark, sf_dir, "orders")
-        .select(
-            F.col("o_custkey").alias("user_id"),
-            ntz_epoch_us("o_orderdate").alias("o_us"),
-        )
+        .select(F.expr("o_custkey AS user_id"), F.expr(f"{ntz_epoch_us_expr('o_orderdate')} AS o_us"))
         .groupBy("user_id")
-        .agg(F.collect_list("o_us").alias("o_arr"))
+        .agg(F.expr("collect_list(o_us) AS o_arr"))
     )
     return ev.join(arrs.hint("shuffle_hash"), "user_id", "left").select(
-        "event_id",
-        "user_id",
-        F.array_max(F.filter(F.col("o_arr"), lambda x: x <= F.col("t_us"))).alias(
-            "last_order_us"
-        ),
+        "event_id", "user_id", F.expr("array_max(filter(o_arr, o -> o <= t_us)) AS last_order_us")
     )
 
 

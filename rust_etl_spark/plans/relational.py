@@ -33,7 +33,7 @@ from rust_etl_spark.functions.money import (
     QTY_INT as _QTY_INT,
     REV_SCALED as _REV_SCALED,
 )
-from rust_etl_spark.functions.rounding import round_half_up, round_half_up_sql
+from rust_etl_spark.functions.rounding import round_half_up, round_half_up_expr, round_half_up_sql
 from rust_etl_spark.plans.catalog import register
 from rust_etl_spark.sources import load_table
 
@@ -104,29 +104,28 @@ def filter_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def groupby_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    cnt = F.col("cnt")
     return (
-        li.filter(F.col("l_shipdate") <= F.lit(_CUTOFF).cast("timestamp"))
+        li.filter(f"l_shipdate <= CAST('{_CUTOFF}' AS TIMESTAMP)")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.sum(F.expr(_QTY_INT)).cast("long").alias("qty"),
-            F.sum(F.expr(_CENTS)).cast("long").alias("cents"),
-            F.sum(F.expr(_REV_SCALED)).cast("long").alias("rev"),
-            F.sum(F.expr(_CHARGE_SCALED)).cast("long").alias("charge"),
-            F.sum(F.expr(_DPCT)).cast("long").alias("dpct"),
-            F.count(F.lit(1)).alias("cnt"),
+            F.expr(f"CAST(sum({_QTY_INT}) AS BIGINT) AS qty"),
+            F.expr(f"CAST(sum({_CENTS}) AS BIGINT) AS cents"),
+            F.expr(f"CAST(sum({_REV_SCALED}) AS BIGINT) AS rev"),
+            F.expr(f"CAST(sum({_CHARGE_SCALED}) AS BIGINT) AS charge"),
+            F.expr(f"CAST(sum({_DPCT}) AS BIGINT) AS dpct"),
+            F.expr("count(1) AS cnt"),
         )
         .select(
             "l_returnflag",
             "l_linestatus",
-            F.col("qty").cast("double").alias("sum_qty"),
-            round_half_up(F.col("cents") / F.lit(100.0), 2).alias("sum_base_price"),
-            round_half_up(F.col("rev") / F.lit(10000.0), 2).alias("sum_disc_price"),
-            round_half_up(F.col("charge") / F.lit(1000000.0), 2).alias("sum_charge"),
-            round_half_up(F.col("qty") / (cnt * F.lit(1.0)), 4).alias("avg_qty"),
-            round_half_up(F.col("cents") / (cnt * F.lit(100.0)), 4).alias("avg_price"),
-            round_half_up(F.col("dpct") / (cnt * F.lit(100.0)), 4).alias("avg_disc"),
-            F.col("cnt").alias("count_order"),
+            F.expr("CAST(qty AS DOUBLE) AS sum_qty"),
+            F.expr(f"{round_half_up_expr('cents / 100.0D', 2)} AS sum_base_price"),
+            F.expr(f"{round_half_up_expr('rev / 10000.0D', 2)} AS sum_disc_price"),
+            F.expr(f"{round_half_up_expr('charge / 1000000.0D', 2)} AS sum_charge"),
+            F.expr(f"{round_half_up_expr('qty / (cnt * 1.0D)', 4)} AS avg_qty"),
+            F.expr(f"{round_half_up_expr('cents / (cnt * 100.0D)', 4)} AS avg_price"),
+            F.expr(f"{round_half_up_expr('dpct / (cnt * 100.0D)', 4)} AS avg_disc"),
+            F.expr("cnt AS count_order"),
         )
     )
 
@@ -202,15 +201,13 @@ def agg_filter_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-            & F.col("l_discount").between(0.05, 0.07)
-            & (F.col("l_quantity") < 24)
+            "((l_shipdate >= CAST('1997-01-01 00:00:00' AS TIMESTAMP)"
+            " AND l_shipdate < CAST('1998-01-01 00:00:00' AS TIMESTAMP))"
+            " AND (l_discount >= 0.05D AND l_discount <= 0.07D))"
+            " AND l_quantity < 24"
         )
-        .agg(F.sum(F.expr(_DISC_REV_SCALED)).cast("long").alias("rev_scaled"))
-        .select(
-            round_half_up(F.col("rev_scaled") / F.lit(10000.0), 2).alias("revenue")
-        )
+        .agg(F.expr(f"CAST(sum({_DISC_REV_SCALED}) AS BIGINT) AS rev_scaled"))
+        .select(F.expr(f"{round_half_up_expr('rev_scaled / 10000.0D', 2)} AS revenue"))
     )
 
 
@@ -264,34 +261,31 @@ def join_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA").select("r_regionkey")
-    nation_asia = nation.join(
-        F.broadcast(region), nation.n_regionkey == region.r_regionkey
-    ).select("n_nationkey", "n_name")
+    region = load_table(spark, sf_dir, "region").filter("r_name = 'ASIA'").select("r_regionkey")
+    nation_asia = nation.join(F.broadcast(region), F.expr("n_regionkey = r_regionkey")).select(
+        "n_nationkey", "n_name"
+    )
     cust = (
         load_table(spark, sf_dir, "customer")
         .select("c_custkey", "c_nationkey")
-        .join(F.broadcast(nation_asia), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(F.broadcast(nation_asia), F.expr("c_nationkey = n_nationkey"))
         .select("c_custkey", "n_name")
     )
     ord_asia = (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
+        orders.join(cust, F.expr("o_custkey = c_custkey"))
         .select("o_orderkey", "n_name")
         .hint("shuffle_hash")
     )
     li_agg = (
-        li.select("l_orderkey", F.expr(_REV_SCALED).alias("rs"))
+        li.select("l_orderkey", F.expr(f"{_REV_SCALED} AS rs"))
         .groupBy("l_orderkey")
-        .agg(F.sum("rs").alias("rs"))
+        .agg(F.expr("sum(rs) AS rs"))
     )
     return (
-        li_agg.join(ord_asia, li_agg.l_orderkey == ord_asia.o_orderkey)
+        li_agg.join(ord_asia, F.expr("l_orderkey = o_orderkey"))
         .groupBy("n_name")
-        .agg(F.sum("rs").cast("long").alias("rev_scaled"))
-        .select(
-            "n_name",
-            round_half_up(F.col("rev_scaled") / F.lit(10000.0), 2).alias("revenue"),
-        )
+        .agg(F.expr("CAST(sum(rs) AS BIGINT) AS rev_scaled"))
+        .select("n_name", F.expr(f"{round_half_up_expr('rev_scaled / 10000.0D', 2)} AS revenue"))
     )
 
 
@@ -328,12 +322,12 @@ def sort_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Top-3-per-group via row_number window with deterministic tie-break; single shuffle on the partition key.",
 )
 def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = Window.partitionBy("c_nationkey").orderBy(F.col("c_acctbal").desc(), F.col("c_custkey"))
+    rk = "CAST(row_number() OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey) AS BIGINT)"
     return (
         load_table(spark, sf_dir, "customer")
         .select("c_custkey", "c_nationkey", "c_acctbal")
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 3)
+        .withColumn("rk", F.expr(rk))
+        .filter("rk <= 3")
     )
 
 
@@ -424,7 +418,7 @@ def sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rust_etl_spark.functions.hashing import md5_long60
 
     orders = load_table(spark, sf_dir, "orders")
-    return orders.filter(md5_long60(F.col("o_orderkey")) % 10 == 0).select(
+    return orders.filter(md5_long60("o_orderkey") % 10 == 0).select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
 

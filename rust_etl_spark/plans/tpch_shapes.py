@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rust_etl_spark.functions.rounding import round_half_up, round_half_up_sql
+from rust_etl_spark.functions.rounding import round_half_up, round_half_up_expr, round_half_up_sql
 from rust_etl_spark.plans.catalog import register
 from rust_etl_spark.sources import load_table
 
@@ -109,34 +109,29 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break). Interleaved warm pairs at gen_sf10: faster in 4/4
     reps, min 3.77 -> 3.15 s; outputs exactly equal.
     """
-    cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
+    cust = load_table(spark, sf_dir, "customer").filter("c_mktsegment = 'BUILDING'").select("c_custkey")
     orders = (
         load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate") < F.lit("1998-03-15 00:00:00").cast("timestamp"))
+        .filter("o_orderdate < CAST('1998-03-15 00:00:00' AS TIMESTAMP)")
         .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
-        .join(cust, F.col("o_custkey") == cust.c_custkey, "left_semi")
+        .join(cust, F.expr("o_custkey = c_custkey"), "left_semi")
         .select("o_orderkey", "o_orderdate", "o_orderpriority")
     )
     per_order = (
         load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_shipdate") > F.lit("1998-03-15 00:00:00").cast("timestamp"))
-        .select("l_orderkey", F.expr(_REV_SCALED).alias("rs"))
+        .filter("l_shipdate > CAST('1998-03-15 00:00:00' AS TIMESTAMP)")
+        .select("l_orderkey", F.expr(f"{_REV_SCALED} AS rs"))
         .groupBy("l_orderkey")
-        .agg(F.sum("rs").cast("long").alias("rev_scaled"))
+        .agg(F.expr("CAST(sum(rs) AS BIGINT) AS rev_scaled"))
     )
     return (
-        per_order.join(orders, per_order.l_orderkey == orders.o_orderkey)
-        .select(
-            "l_orderkey",
-            "rev_scaled",
-            F.year("o_orderdate").alias("o_year"),
-            "o_orderpriority",
-        )
-        .orderBy(F.col("rev_scaled").desc(), F.col("l_orderkey"))
+        per_order.join(orders, F.expr("l_orderkey = o_orderkey"))
+        .select("l_orderkey", "rev_scaled", F.expr("year(o_orderdate) AS o_year"), "o_orderpriority")
+        .orderBy(F.desc("rev_scaled"), "l_orderkey")
         .limit(10)
         .select(
             "l_orderkey",
-            round_half_up(F.col("rev_scaled") / F.lit(10000.0), 2).alias("revenue"),
+            F.expr(f"{round_half_up_expr('rev_scaled / 10000.0D', 2)} AS revenue"),
             "o_year",
             "o_orderpriority",
         )
@@ -193,26 +188,26 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     li = (
         load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_returnflag") == "R")
-        .select("l_orderkey", F.expr(_REV_SCALED).alias("r"))
+        .filter("l_returnflag = 'R'")
+        .select("l_orderkey", F.expr(f"{_REV_SCALED} AS r"))
     )
-    per_order = li.groupBy("l_orderkey").agg(F.sum("r").alias("r"))
+    per_order = li.groupBy("l_orderkey").agg(F.expr("sum(r) AS r"))
     per_cust = (
-        per_order.join(orders, per_order.l_orderkey == orders.o_orderkey)
+        per_order.join(orders, F.expr("l_orderkey = o_orderkey"))
         .groupBy("o_custkey")
-        .agg(F.sum("r").cast("long").alias("rev_scaled"))
+        .agg(F.expr("CAST(sum(r) AS BIGINT) AS rev_scaled"))
     )
     return (
-        per_cust.join(cust, per_cust.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
+        per_cust.join(cust, F.expr("o_custkey = c_custkey"))
+        .join(F.broadcast(nation), F.expr("c_nationkey = n_nationkey"))
         .select("c_custkey", "c_name", "n_name", "rev_scaled")
-        .orderBy(F.col("rev_scaled").desc(), F.col("c_custkey"))
+        .orderBy(F.desc("rev_scaled"), "c_custkey")
         .limit(20)
         .select(
             "c_custkey",
             "c_name",
             "n_name",
-            round_half_up(F.col("rev_scaled") / F.lit(10000.0), 2).alias("revenue"),
+            F.expr(f"{round_half_up_expr('rev_scaled / 10000.0D', 2)} AS revenue"),
         )
     )
 

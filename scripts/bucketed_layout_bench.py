@@ -1,8 +1,10 @@
 """Bucketed co-partitioned layout vs plain parquet (VERDICT r8 #1).
 
-SCALING.md's broadcast->SMJ crossover note promises "at that scale you
-co-partition/bucket orders+lineitem instead" — this script MEASURES
-that move instead of asserting it. At each gen tier it:
+The flagged queries' shuffle-write series (SCALING.md, "Flagged
+queries: shuffle write (MB) at every audited tier") grow with the fact
+tables once the dims outgrow the broadcast threshold; co-partitioning
+orders+lineitem on the join key is the layout answer, and this script
+MEASURES that move. At each gen tier it:
 
 1. runs the SHIPPED catalog queries (q3 / q18 / join_star) against the
    plain parquet layout — min-of-3 wall, stage-attributed shuffle-write
@@ -16,10 +18,12 @@ that move instead of asserting it. At each gen tier it:
    bucketed copies, exactly as a metastore repoint would — and
    re-measures.
 
-Writes BUCKETED_BENCH.json; scripts/scaling_report.py renders it into
-SCALING.md's "Bucketed layout" section. tests/test_bucketed_layout.py
-locks the plan shape (exchange-free bucketed join/agg, exchange-full
-parquet baseline) at the fixture scale.
+Writes BUCKETED_BENCH.json (run count stamped per family, so a
+SPARK_GRAFT_BUCKETED_FAMILIES partial rerun keeps the other families'
+own); scripts/scaling_report.py renders it into SCALING.md's "Bucketed
+co-partitioned layout" section. tests/test_bucketed_layout.py locks the
+plan shape (exchange-free bucketed join/agg, exchange-full parquet
+baseline) at the fixture scale.
 
 Round 10 adds a SECOND key family (VERDICT r9 #5): events bucketed on
 user_id with a compound (user_id, ts_ns, event_id) write-time sort —
@@ -82,9 +86,9 @@ FAMILIES = [
             # the lineitem⋈orders join both ride the bucket clustering.
             "q10_returned_items",
         ],
-        # 100x: where the broadcast->SMJ crossover fully arrives (q3's
-        # shuffle steps to ~600 MB as customer outgrows the threshold;
-        # SCALING.md flag note) — the tier the bucketed layout exists for.
+        # the larger the tier, the more of q3/q10/q18's shuffle is the
+        # fact-side exchange this layout removes (SCALING.md, flagged-
+        # queries shuffle table).
         "tiers": ["gen_sf1", "gen_sf3", "gen_sf10"],
     },
     {
@@ -247,6 +251,7 @@ def main() -> None:
         families_out.append(
             {
                 "family": fam["family"],
+                "runs_per_point": RUNS,
                 "facts": {
                     t: (s if isinstance(s, str) else {"bucket": s[0], "sort": s[1]})
                     for t, s in facts.items()
@@ -258,7 +263,6 @@ def main() -> None:
 
     record = {
         "metric": "bucketed_layout_vs_parquet",
-        "runs_per_point": RUNS,
         "families": families_out,
         "note": (
             "Same shipped catalog queries both times; the bucketed runs "
@@ -283,7 +287,13 @@ def main() -> None:
         with open(out_path) as f:
             prev = json.load(f)
         ran = {fo["family"] for fo in families_out}
-        merged = [fo for fo in prev.get("families", []) if fo["family"] not in ran]
+        # families kept from the previous record keep their own run
+        # count (older records stamped it once, at the top level)
+        merged = [
+            {"runs_per_point": prev.get("runs_per_point"), **fo}
+            for fo in prev.get("families", [])
+            if fo["family"] not in ran
+        ]
         record["families"] = merged + families_out
     with open(out_path, "w") as f:
         json.dump(record, f, indent=1)

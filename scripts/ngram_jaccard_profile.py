@@ -33,8 +33,8 @@ def _noop(df) -> float:
 
 
 def main() -> None:
-    from rust_etl_spark.functions.hashing import md5_long60
-    from rust_etl_spark.functions.textfns import tokens, word_shingles
+    from rust_etl_spark.functions.hashing import md5_long60_expr
+    from rust_etl_spark.functions.textfns import tokens, word_shingles_expr
     from rust_etl_spark.operators.dedup import (
         JACCARD_DF_CAP,
         JACCARD_SHINGLE_N,
@@ -57,7 +57,10 @@ def main() -> None:
         "doc_id",
         F.explode(
             F.array_distinct(
-                F.transform(word_shingles(F.col("t"), JACCARD_SHINGLE_N), md5_long60)
+                F.expr(
+                    f"transform({word_shingles_expr('t', JACCARD_SHINGLE_N)}, "
+                    f"s -> {md5_long60_expr('s')})"
+                )
             )
         ).alias("sh"),
     )

@@ -393,18 +393,9 @@ def _idle_remeasure_record(ir: dict) -> list[str]:
     n = len(ir["queries"])
     lines += [
         "",
-        f"{reverted}/{n} movers revert to within 1.1x of the base record"
-        " when measured idle — those elevations were measurement-window"
-        " noise on unchanged plans."
-        + (
-            f" {chain_band}/{n} sit within 1.2x of the chain reference:"
-            " where idle matches the chain but not the base, the shift is"
-            " SANDBOX drift between the two records' windows (the CPU"
-            " anchor does not capture host I/O/memory contention), not a"
-            " plan regression — the chain record is the reproducible one"
-            " and is the correct diff baseline going forward."
-            if has_chain else ""
-        ),
+        f"{reverted}/{n} movers are within 1.1x of the base record when"
+        " measured idle."
+        + (f" {chain_band}/{n} are within 1.2x of the chain reference." if has_chain else ""),
         "",
     ]
     return lines

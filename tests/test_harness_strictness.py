@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import duckdb
 import pandas as pd
-from rust_etl_spark.functions.textfns import tokens, word_shingles, word_shingles_sql, tokens_sql
+from rust_etl_spark.functions.textfns import tokens_expr, word_shingles, word_shingles_sql, tokens_sql
 from tests.oracle_harness import compare
 
 
@@ -47,7 +47,7 @@ def test_word_shingles_short_docs_match_sql_mirror(spark):
     got = {
         r["doc_id"]: list(r["sh"])
         for r in df.select(
-            "doc_id", word_shingles(tokens("text"), n).alias("sh")
+            "doc_id", word_shingles(tokens_expr("text"), n).alias("sh")
         ).collect()
     }
     con = duckdb.connect()

@@ -217,7 +217,7 @@ def test_jaccard_df_cap_drops_universal_shingle(spark, tmp_path):
     bounded — while a genuinely near-duplicate pair (sharing RARE
     shingles) is still found."""
     from rust_etl_spark.operators.dedup import JACCARD_DF_CAP, JACCARD_SHINGLE_N
-    from rust_etl_spark.functions.textfns import tokens, word_shingles
+    from rust_etl_spark.functions.textfns import tokens_expr, word_shingles
 
     n_docs = 200
     boiler = "all rights reserved by the original publisher"
@@ -245,7 +245,7 @@ def test_jaccard_df_cap_drops_universal_shingle(spark, tmp_path):
     sh = docs.select(
         "doc_id",
         F.explode(
-            F.array_distinct(word_shingles(tokens("text"), JACCARD_SHINGLE_N))
+            F.array_distinct(word_shingles(tokens_expr("text"), JACCARD_SHINGLE_N))
         ).alias("sh"),
     )
     df_counts = sh.groupBy("sh").count()
@@ -379,8 +379,8 @@ def test_containment_df_cap_bounds_boilerplate_corpus(spark):
         JACCARD_SHINGLE_N,
         dedup_containment,
     )
-    from rust_etl_spark.functions.hashing import md5_long60
-    from rust_etl_spark.functions.textfns import tokens, word_shingles
+    from rust_etl_spark.functions.hashing import md5_long60_expr
+    from rust_etl_spark.functions.textfns import tokens_expr, word_shingles_expr
 
     n_docs = 3 * JACCARD_DF_CAP  # every header shingle far over the cap
     header = "standard legal disclaimer boilerplate applies to this page"
@@ -413,8 +413,9 @@ def test_containment_df_cap_bounds_boilerplate_corpus(spark):
         "doc_id",
         F.explode(
             F.array_distinct(
-                F.transform(
-                    word_shingles(tokens("text"), JACCARD_SHINGLE_N), md5_long60
+                F.expr(
+                    f"transform({word_shingles_expr(tokens_expr('text'), JACCARD_SHINGLE_N)}, "
+                    f"s -> {md5_long60_expr('s')})"
                 )
             )
         ).alias("sh"),

@@ -156,12 +156,10 @@ def test_round_half_up_is_cross_engine_exact(spark, xs):
 def test_md5_long60_matches_python_hashlib(spark, tokens_list):
     """The conv(md5-prefix) hash must equal int(md5hex[:15], 16) —
     guards the Spark-side conv/substring chain against silent drift."""
-    import pyspark.sql.functions as F
-
     from rust_etl_spark.functions.hashing import md5_long60
 
     df = spark.createDataFrame([(t,) for t in tokens_list], "tok string")
-    got = {r["tok"]: r["h"] for r in df.select("tok", md5_long60(F.col("tok")).alias("h")).collect()}
+    got = {r["tok"]: r["h"] for r in df.select("tok", md5_long60("tok").alias("h")).collect()}
     for t in tokens_list:
         expect = int(hashlib.md5(t.encode()).hexdigest()[:15], 16)
         assert got[t] == expect, f"{t!r}"
