@@ -6,31 +6,29 @@ integer codepoints: every ``List(Int64|Float64)`` column is cast to
 (/root/reference/src/processor.rs:100-123). The UInt8 cast *wraps*
 (x & 0xFF) and the UTF-8 decode is lossy-tolerant.
 
-Spark mapping: a vectorized Arrow Pandas UDF reproduces the exact
-chain — mask to a byte, assemble bytes, ``decode('utf-8', 'replace')``.
+Spark mapping: the same chain as one JVM expression per column, so no
+Python worker runs. ``CAST(x AS BIGINT) & 255`` wraps each element to
+a byte (the cast truncates a double toward zero, like Python ``int``);
+``lpad(hex(..))``, ``array_join`` and ``unhex`` assemble the bytes
+(``array_join`` keeps a null array null, ``concat_ws`` would give
+``''``); ``make_valid_utf8`` replaces each ill-formed subsequence with
+U+FFFD exactly as Python's ``decode('utf-8', 'replace')`` does.
+``decode(b, 'UTF-8')`` is not used: the JDK charset decoder splits
+surrogates, overlongs and truncated sequences differently.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-
-@F.pandas_udf(T.StringType())
-def _decode_codepoints(s: pd.Series) -> pd.Series:
-    def dec(arr):
-        if arr is None:
-            return None
-        return bytes(int(x) & 0xFF for x in arr).decode("utf-8", "replace")
-
-    return s.map(dec)
+from rust_etl_spark.operators.normalize import quote_ident
 
 
-def decode_codepoints_col(col: Column | str) -> Column:
-    """Column expression: array<int-like> -> decoded UTF-8 string."""
-    return _decode_codepoints(F.col(col) if isinstance(col, str) else col)
+def decode_codepoints_expr(expr: str) -> str:
+    """Spark SQL: array<int-like> -> decoded UTF-8 string (null stays null)."""
+    hex_bytes = f"transform({expr}, x -> lpad(hex(CAST(x AS BIGINT) & 255), 2, '0'))"
+    return f"make_valid_utf8(CAST(unhex(array_join({hex_bytes}, '')) AS STRING))"
 
 
 _DECODABLE = (T.LongType(), T.DoubleType(), T.IntegerType(), T.FloatType(), T.ShortType())
@@ -40,10 +38,11 @@ def decode_codepoint_arrays(df: DataFrame) -> DataFrame:
     """Full-schema scan: replace every array<int64|float64> column with
     its decoded string, preserving column order (processor.rs:103-121).
     """
-    out: list[Column] = []
+    out = []
     for f in df.schema.fields:
+        name = quote_ident(f.name)
         if isinstance(f.dataType, T.ArrayType) and f.dataType.elementType in _DECODABLE:
-            out.append(decode_codepoints_col(f.name).alias(f.name))
+            out.append(f"{decode_codepoints_expr(name)} AS {name}")
         else:
-            out.append(F.col(f.name))
-    return df.select(*out)
+            out.append(name)
+    return df.selectExpr(*out)

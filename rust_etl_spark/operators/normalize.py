@@ -5,7 +5,8 @@ Parity map (all citations into /root/reference):
 - explode (list -> rows)            src/processor.rs:44-46  -> explode_outer
 - unnest (struct -> columns)        src/processor.rs:46-52  -> select("c.*")
 - drop technical columns            src/processor.rs:57-72  -> df.drop(*cols)
-- empty-table guard                 src/processor.rs:31-35  -> require_nonempty
+- empty-table guard                 src/processor.rs:31-35  -> schema check in
+                                                               sources/json_envelope.py
 
 Semantics notes:
 - Polars ``explode`` emits a null row for null/empty lists, so the
@@ -43,15 +44,10 @@ TECHNICAL_COLUMNS: tuple[str, ...] = (
 )
 
 
-def require_nonempty(df: DataFrame, context: str = "table") -> DataFrame:
-    """Refuse to continue on an empty frame (processor.rs:31-35).
-
-    ``isEmpty`` compiles to a LIMIT-1 job — O(1) rows read, safe at any
-    scale (no count over the full table).
-    """
-    if df.isEmpty():
-        raise SchemaError(f"empty {context}: refusing to write output")
-    return df
+def quote_ident(name: str) -> str:
+    """Backtick-quote a column name for ``F.col`` / SQL text, so JSON
+    field names holding dots or backticks resolve as one column."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def drop_technical(df: DataFrame, cols: tuple[str, ...] = TECHNICAL_COLUMNS) -> DataFrame:
@@ -81,9 +77,9 @@ def flatten_struct(df: DataFrame, col: str) -> DataFrame:
     out: list = []
     for c in df.columns:
         if c == col:
-            out.extend(F.col(f"{col}.{f}").alias(f) for f in inner)
+            out.extend(F.col(f"{quote_ident(col)}.{quote_ident(f)}").alias(f) for f in inner)
         else:
-            out.append(F.col(c))
+            out.append(F.col(quote_ident(c)))
     return df.select(*out)
 
 
@@ -92,7 +88,7 @@ def explode_records(df: DataFrame, col: str) -> DataFrame:
 
     Polars-``explode`` parity (processor.rs:44-46) => ``explode_outer``.
     """
-    return df.withColumn(col, F.explode_outer(F.col(col)))
+    return df.withColumn(col, F.explode_outer(F.col(quote_ident(col))))
 
 
 def normalize_envelope(df: DataFrame, root_path: str | None = None) -> DataFrame:

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rust_etl_spark.operators.decode import decode_codepoints_col
+from rust_etl_spark.operators.decode import decode_codepoints_expr
 from rust_etl_spark.operators.normalize import drop_technical, flatten_struct
 from rust_etl_spark.plans.catalog import register
 from rust_etl_spark.sources import load_table
@@ -66,16 +66,12 @@ def struct_unnest(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   x -> chr(CAST(x AS INT))), '') AS decoded
         FROM documents
     """,
-    doc="Codepoint-array -> string decode (reference byte_arrays, processor.rs:100-123) via Arrow pandas UDF.",
+    doc="Codepoint-array -> string decode (reference byte_arrays, processor.rs:100-123) as one JVM expression: byte wrap, unhex, make_valid_utf8.",
 )
 def decode_codepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    arr = F.array(
-        (F.lit(65) + F.col("doc_id") % 26).cast("long"),
-        F.lit(104).cast("long"),
-        F.lit(105).cast("long"),
-    )
-    return docs.select("doc_id", decode_codepoints_col(arr).alias("decoded"))
+    arr = "array(CAST(65 + doc_id % 26 AS BIGINT), CAST(104 AS BIGINT), CAST(105 AS BIGINT))"
+    return docs.select("doc_id", F.expr(f"{decode_codepoints_expr(arr)} AS decoded"))
 
 
 @register(

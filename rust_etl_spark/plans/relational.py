@@ -882,13 +882,6 @@ def customer_ltv_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------- ABC / Pareto classes
 
 ABC_BAND = 100_000_000  #: revenue-band width for the two-level prefix
-#: integer cents x pct revenue: floor-half-up cents x (100 - pct)
-#: (the functions/money.py IEEE form — round(double) is BigDecimal-based
-#: in Spark and only empirically engine-portable; see money.cents_sql)
-_REV_SCALED = (
-    "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"
-    " * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT))"
-)
 
 
 @register(

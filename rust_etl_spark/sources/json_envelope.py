@@ -11,6 +11,13 @@ Spark mapping notes:
   documents, not JSON-lines. Schema inference reads the whole
   document; the reference's 1000-record inference cap
   (processor.rs:24-27) is not applied.
+- The empty-table guard (processor.rs:31-35) reads the schema, not the
+  rows, so inference and the write are the only parses: zero records
+  (``[]``, an empty file, whitespace) always infer ``struct<>``, as do
+  ``{}``, ``[{}]``, ``[null]`` and ``null``. ``explode_outer`` and the
+  struct flatten never drop a row, so a frame left with no column after
+  ``drop_technical`` (also an envelope of pagination keys only) is the
+  one case to refuse.
 """
 
 from __future__ import annotations
@@ -23,7 +30,6 @@ from rust_etl_spark.operators.normalize import (
     TECHNICAL_COLUMNS,
     drop_technical,
     normalize_envelope,
-    require_nonempty,
 )
 
 
@@ -42,8 +48,8 @@ def process_json_document(
 ) -> DataFrame:
     """The full processor.rs transform chain as one declarative plan:
 
-    scan -> empty guard -> dtype-dispatched normalize (explode_outer /
-    struct flatten) -> drop technical columns -> decode codepoint
+    scan -> dtype-dispatched normalize (explode_outer / struct flatten)
+    -> drop technical columns -> empty guard -> decode codepoint
     arrays. Caller writes the result (sink stays separate so the same
     transform serves batch files, streams, and tests).
     """
@@ -52,10 +58,9 @@ def process_json_document(
         # Unparseable JSON: the reader produced only the corrupt-record
         # column (parity: reference JsonReader error -> ProcessorError).
         raise SchemaError(f"unparseable JSON document {path!r}")
-    df = require_nonempty(df, context=f"json document {path!r}")
-    df = normalize_envelope(df, root_path)
-    df = require_nonempty(df, context=f"records of {path!r}")
-    df = drop_technical(df, technical_columns)
+    df = drop_technical(normalize_envelope(df, root_path), technical_columns)
+    if not df.schema.fields:
+        raise SchemaError(f"json document {path!r} has no records or no data columns: refusing to write output")
     return decode_codepoint_arrays(df)
 
 

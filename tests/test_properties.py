@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -37,6 +38,39 @@ def test_decode_matches_reference_semantics(spark, arrays):
     got = {r["id"]: r["codigo"] for r in decode_codepoint_arrays(df).collect()}
     for i, arr in rows:
         assert got[i] == _decode_reference(arr), f"row {i}: {arr!r}"
+
+
+#: ill-formed UTF-8 the lossy decode must split exactly as Python does:
+#: a surrogate, two overlongs, a code point above U+10FFFF, a truncated
+#: 4-byte sequence, bytes never valid in UTF-8, a 5-byte form; then a
+#: valid 4-byte emoji, the empty array and a null array.
+_SPECIAL_BYTES = [
+    [0xED, 0xA0, 0x80],
+    [0xC0, 0xAF],
+    [0xE0, 0x80, 0xAF],
+    [0xF4, 0x90, 0x80, 0x80],
+    [0xF0, 0x9F, 0x98],
+    [0xFF],
+    [0xC3],
+    [0xF8, 0x88, 0x80, 0x80, 0x80],
+    [0xF0, 0x9F, 0x98, 0x80],
+    [],
+    None,
+]
+
+
+@pytest.mark.parametrize("elem", ["bigint", "double"])
+def test_decode_special_byte_sequences(spark, elem):
+    from rust_etl_spark.operators.decode import decode_codepoint_arrays
+
+    arrays = _SPECIAL_BYTES + [[0x61, *b, 0x62] for b in _SPECIAL_BYTES if b]
+    if elem == "double":
+        arrays = [None if a is None else [float(x) for x in a] for a in arrays]
+    df = spark.createDataFrame(list(enumerate(arrays)), f"id long, codigo array<{elem}>")
+    got = {r["id"]: r["codigo"] for r in decode_codepoint_arrays(df).collect()}
+    for i, arr in enumerate(arrays):
+        want = None if arr is None else _decode_reference(arr)
+        assert got[i] == want, f"{elem} row {i}: {arr!r}"
 
 
 @given(
