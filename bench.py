@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -121,8 +122,67 @@ HEADLINE = [
 ]
 
 
+#: Every query the scale and misbroadcast audits sweep: the graded
+#: window first, then the bench extras, order-preserving.
+AUDITED = list(dict.fromkeys([*catalog.GRADE_ORDER, *HEADLINE, *EXTENDED]))
+
+
 def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def measure(spark, build, runs: int) -> dict:
+    """Time ``build()`` plus a noop write ``runs`` times, then read the
+    last run's counters from the session's status stores (no UI needed).
+
+    Returns ``walls`` (seconds per run), the ``perfbench.probe.SparkCounters``
+    totals of the last run (``stages`` counts executed stages only),
+    ``listed_stages`` (every stage of the last run's jobs, skipped ones
+    included) and ``plan``: the AQE-final physical plan of the last
+    run's write, one node per line, with no Initial Plan section.
+    Nothing is read inside the timed region."""
+    from perfbench.probe import SparkCounters
+
+    counters = SparkCounters(spark)
+    walls = []
+    for _ in range(runs):
+        counters.mark()
+        t0 = time.perf_counter()
+        _force(build())
+        walls.append(time.perf_counter() - t0)
+    tracker = spark.sparkContext.statusTracker()
+    listed = set()
+    for j in tracker.getJobIdsForGroup(None):
+        if j > counters.job_mark and (info := tracker.getJobInfo(j)) is not None:
+            listed.update(info.stageIds)
+    out = counters.read()
+    # read() moved the watermark to the last SQL execution: the write.
+    # Its plan graph is the final plan only (query stages unwrapped).
+    nodes = counters._sql.planGraph(counters.exec_mark).allNodes()
+    out["plan"] = "\n".join(nodes.apply(i).desc() for i in range(nodes.size()))
+    out["listed_stages"] = len(listed)
+    out["walls"] = walls
+    return out
+
+
+#: a hash/range shuffle node at the start of a plan line (a
+#: ReusedExchange line names the exchange it reuses later in the line)
+_SHUFFLE = re.compile(r"^[\s:+-]*Exchange (?:hash|range)partitioning", re.M)
+
+
+def shuffle_exchanges(plan: str) -> int:
+    """Hash/range shuffle exchanges in a physical plan string, counting
+    neither reused exchanges nor an AQE ``== Initial Plan ==`` subtree:
+    an adaptive plan's toString prints the Final and the Initial plan,
+    so a count over the whole string counts most shuffles twice."""
+    keep, cut = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if cut is not None and depth >= cut:
+            continue
+        cut = depth if "== Initial Plan ==" in line else None
+        keep.append(line)
+    return len(_SHUFFLE.findall("\n".join(keep)))
 
 
 def _calibration() -> float:
@@ -150,12 +210,11 @@ def _calibrated_vs_prev(total: float, calibration: float, sf: str):
     driver records those at sf0.1, so other tiers usually return
     None. Returns {"round": N, "ratio": r} or None."""
     import glob
-    import re as _re
 
     here = os.path.dirname(os.path.abspath(__file__))
     best = None
     for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = _re.search(r"BENCH_r(\d+)\.json$", path)
+        m = re.search(r"BENCH_r(\d+)\.json$", path)
         if not m:
             continue
         try:
@@ -218,18 +277,19 @@ def main() -> None:
     # min-of-3 per query: first execution pays codegen/JIT, the min
     # reflects steady-state throughput. The max-min spread is reported
     # alongside so single-query noise is visible in the artifact.
+    counters: dict[str, dict] = {}
+
     def run_set(names: list[str]) -> tuple[dict[str, float], dict[str, float]]:
         timings: dict[str, float] = {}
         spreads: dict[str, float] = {}
         for name in names:
             q = catalog.get(name)
-            runs = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                _force(q.fn(spark, sf_dir))
-                runs.append(time.perf_counter() - t0)
+            m = measure(spark, lambda: q.fn(spark, sf_dir), 3)
+            runs = m.pop("walls")
+            del m["plan"]
             timings[name] = round(min(runs), 3)
             spreads[name] = round(max(runs) - min(runs), 3)
+            counters[name] = {k: round(v, 3) for k, v in m.items()}
         return timings, spreads
 
     timings, variance = run_set(HEADLINE)
@@ -270,6 +330,9 @@ def main() -> None:
         "variance": variance,
         "queries_extended": extended,
         "variance_extended": variance_ext,
+        # last-run counters per query (bench.measure): executed and
+        # listed stages, tasks, shuffle/spill bytes, executor CPU
+        "counters": counters,
         "note": (
             "per-query values are min-of-3; 'variance' is the "
             "max-min spread per query — sub-second queries swing "

@@ -7,9 +7,10 @@ orders+lineitem on the join key is the layout answer, and this script
 MEASURES that move. At each gen tier it:
 
 1. runs the SHIPPED catalog queries (q3 / q18 / join_star) against the
-   plain parquet layout — min-of-3 wall, stage-attributed shuffle-write
-   bytes (UI REST, same mechanism as scale_audit.py), and the final
-   adaptive plan's shuffle-Exchange count;
+   plain parquet layout through ``bench.measure`` with the Spark UI off
+   (the primitive scale_audit.py uses) — min-of-3 wall, the last run's
+   shuffle-write bytes, and the shuffle-Exchange count of that run's
+   AQE-final plan;
 2. materializes orders+lineitem as bucketed, bucket-sorted catalog
    tables on the orderkey (sinks.write_bucketed_fact_layout — one file
    per bucket, so SMJ can skip the Sort too), timing the one-off write;
@@ -38,14 +39,11 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-UI_PORT = 4048
 #: 2x the reader's core count: bucket-grain scans can't split files, so
 #: buckets ARE the scan parallelism — at 32 (1x cores) q18's full-table
 #: pre-aggregate ran 1.8x SLOWER than parquet at the 100x tier (one
@@ -131,62 +129,30 @@ FAMILIES = [
 ]
 
 
-def _stages(app_id: str) -> list[dict]:
-    url = f"http://localhost:{UI_PORT}/api/v1/applications/{app_id}/stages"
-    return json.load(urllib.request.urlopen(url))
-
-
-def _measure(spark, app_id: str, seen: set[int], name: str, sf_dir: str) -> dict:
-    """min-of-RUNS wall + shuffle bytes of the LAST run + final-plan
+def _measure(spark, name: str, sf_dir: str) -> dict:
+    """min-of-RUNS wall + the last run's shuffle bytes and final-plan
     shuffle-exchange count for one catalog query."""
+    import bench
     from rust_etl_spark.plans import catalog
 
     q = catalog.get(name)
-    # run 1: stage-attributed shuffle bytes for exactly one execution
-    seen.update(s["stageId"] for s in _stages(app_id))
-    df = q.fn(spark, sf_dir)
-    t0 = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    walls = [time.perf_counter() - t0]
-    new = [s for s in _stages(app_id) if s["stageId"] not in seen]
-    seen.update(s["stageId"] for s in new)
-    shuffle_mb = round(sum(s.get("shuffleWriteBytes", 0) for s in new) / 1e6, 3)
-    # remaining runs: timing only (min-of-RUNS)
-    for _ in range(RUNS - 1):
-        df = q.fn(spark, sf_dir)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        walls.append(time.perf_counter() - t0)
-    # final adaptive plan: collect() executes THIS DataFrame's own
-    # QueryExecution (results are top-k/grouped — tiny), after which
-    # executedPlan is the AQE-final physical plan.
-    df = q.fn(spark, sf_dir)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    exchanges = len(re.findall(r"\bExchange (?:hash|range)partitioning", plan))
+    m = bench.measure(spark, lambda: q.fn(spark, sf_dir), RUNS)
     return {
-        "wall_sec": round(min(walls), 3),
-        "shuffle_write_mb": shuffle_mb,
-        "shuffle_exchanges": exchanges,
+        "wall_sec": round(min(m["walls"]), 3),
+        "shuffle_write_mb": round(m["shuffle_write_bytes"] / 1e6, 3),
+        "shuffle_exchanges": bench.shuffle_exchanges(m["plan"]),
     }
 
 
 def main() -> None:
+    from perfbench.probe import SparkCounters
     from rust_etl_spark.session import get_spark
     from rust_etl_spark.sinks import write_bucketed_fact_layout
     from rust_etl_spark.sources import clear_layout_overrides, set_layout_override
 
-    spark = get_spark(
-        "bucketed-layout-bench",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.port": str(UI_PORT),
-            "spark.ui.retainedStages": "8000",
-        },
-    )
+    spark = get_spark("bucketed-layout-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    app_id = spark.sparkContext.applicationId
-    seen: set[int] = set()
+    counters = SparkCounters(spark)
 
     # SPARK_GRAFT_BUCKETED_FAMILIES=events_user re-runs only the named
     # families and MERGES their rows into the existing BUCKETED_BENCH
@@ -206,22 +172,18 @@ def main() -> None:
                 continue
             base = {}
             for name in queries:
-                base[name] = _measure(spark, app_id, seen, name, sf_dir)
+                base[name] = _measure(spark, name, sf_dir)
                 print(f"{fam['family']} {tag} parquet   {name:24s} {base[name]}", flush=True)
 
+            counters.mark()
             t0 = time.perf_counter()
-            seen.update(s["stageId"] for s in _stages(app_id))
             names = write_bucketed_fact_layout(
                 spark, sf_dir, facts, n_buckets=N_BUCKETS,
                 suffix=f"_{fam['family']}_{tag}",
             )
-            new = [s for s in _stages(app_id) if s["stageId"] not in seen]
-            seen.update(s["stageId"] for s in new)
             writes = {
                 "wall_sec": round(time.perf_counter() - t0, 3),
-                "shuffle_write_mb": round(
-                    sum(s.get("shuffleWriteBytes", 0) for s in new) / 1e6, 3
-                ),
+                "shuffle_write_mb": round(counters.read()["shuffle_write_bytes"] / 1e6, 3),
             }
             print(f"{fam['family']} {tag} bucketed write: {writes}", flush=True)
 
@@ -230,7 +192,7 @@ def main() -> None:
             try:
                 bkt = {}
                 for name in queries:
-                    bkt[name] = _measure(spark, app_id, seen, name, sf_dir)
+                    bkt[name] = _measure(spark, name, sf_dir)
                     print(f"{fam['family']} {tag} bucketed  {name:24s} {bkt[name]}", flush=True)
             finally:
                 clear_layout_overrides()
@@ -252,6 +214,9 @@ def main() -> None:
             {
                 "family": fam["family"],
                 "runs_per_point": RUNS,
+                "cpus": spark.sparkContext.defaultParallelism,
+                # shuffle_exchanges counts the AQE-final plan only
+                "plan_sections": "final",
                 "facts": {
                     t: (s if isinstance(s, str) else {"bucket": s[0], "sort": s[1]})
                     for t, s in facts.items()
@@ -270,9 +235,9 @@ def main() -> None:
             "(sources.set_layout_override) at bucketed, bucket-sorted "
             "catalog tables written once by "
             "sinks.write_bucketed_fact_layout. shuffle_exchanges counts "
-            "'Exchange hash/rangepartitioning' nodes in the AQE-final "
-            "plan; shuffle_write_mb is stage-attributed to exactly one "
-            "execution. The one-off bucketed write's cost is reported "
+            "the 'Exchange hash/rangepartitioning' nodes of the last "
+            "run's AQE-final plan, reused exchanges not counted; "
+            "shuffle_write_mb is that run's. The one-off bucketed write's cost is reported "
             "separately — at 100 TB it is paid at ingest and amortized "
             "over every subsequent join/agg on the bucket key. Two "
             "families: orderkey (orders+lineitem co-bucketed) and "

@@ -11,8 +11,8 @@ A/B on the SAME minimal q1 shape (filter + 2-key groupBy + charge sum
            escape hatch, registered as groupby_agg_dec38)
 
 Also records the full 8-aggregate groupby_agg for context. Warm scan
-before timing (round-11 cold-page-cache rule), min-of-3 noop writes,
-CPU calibration anchor. Writes DEC38_BENCH.json;
+before timing (round-11 cold-page-cache rule), min-of-3 noop writes
+through ``bench.measure``, CPU calibration anchor. Writes DEC38_BENCH.json;
 scripts/scaling_report.py renders it into SCALING.md.
 
 Run on a QUIET machine:  python scripts/dec38_bench.py  (~2 min)
@@ -23,7 +23,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -35,13 +34,10 @@ TIERS = [
 RUNS = 3
 
 
-def _noop_wall(df) -> float:
-    walls = []
-    for _ in range(RUNS):
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        walls.append(time.perf_counter() - t0)
-    return round(min(walls), 3)
+def _min_wall(spark, df) -> float:
+    import bench
+
+    return round(min(bench.measure(spark, lambda: df, RUNS)["walls"]), 3)
 
 
 def main() -> None:
@@ -79,10 +75,10 @@ def main() -> None:
         row = {
             "tier": tier,
             "mult": mult,
-            "bigint_min_sec": _noop_wall(bigint),
-            "dec38_min_sec": _noop_wall(dec38),
-            "groupby_agg_full_sec": _noop_wall(get("groupby_agg").fn(spark, sf_dir)),
-            "groupby_agg_dec38_sec": _noop_wall(get("groupby_agg_dec38").fn(spark, sf_dir)),
+            "bigint_min_sec": _min_wall(spark, bigint),
+            "dec38_min_sec": _min_wall(spark, dec38),
+            "groupby_agg_full_sec": _min_wall(spark, get("groupby_agg").fn(spark, sf_dir)),
+            "groupby_agg_dec38_sec": _min_wall(spark, get("groupby_agg_dec38").fn(spark, sf_dir)),
         }
         row["dec38_over_bigint"] = round(row["dec38_min_sec"] / row["bigint_min_sec"], 3)
         rows.append(row)
@@ -90,6 +86,7 @@ def main() -> None:
 
     record = {
         "runs_per_point": RUNS,
+        "cpus": spark.sparkContext.defaultParallelism,
         "calibration_sec": bench._calibration(),
         "tiers": rows,
         "note": "A/B on the minimal q1 charge shape; delta = accumulator type only",

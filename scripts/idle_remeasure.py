@@ -19,12 +19,9 @@ Run on a QUIET machine:
 from __future__ import annotations
 
 import argparse
-import glob
 import json
 import os
-import re
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -142,11 +139,7 @@ def main() -> None:
     rows = []
     for name in names:
         q = get(name)
-        runs = []
-        for _ in range(args.runs):
-            t0 = time.perf_counter()
-            q.fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
+        runs = bench.measure(spark, lambda: q.fn(spark, args.sf_dir), args.runs)["walls"]
         idle = round(min(runs), 3)
         row = {
             "query": name,
@@ -176,6 +169,7 @@ def main() -> None:
         "cur_calibration_sec": c_cal,
         "idle_calibration_sec": my_cal,
         "runs_per_query": args.runs,
+        "cpus": spark.sparkContext.defaultParallelism,
         "queries": rows,
         "note": "idle_vs_base_calibrated ~1.0 adjudicates the cur-record "
         "elevation as measurement-window noise on unchanged plans",

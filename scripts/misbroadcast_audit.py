@@ -131,19 +131,6 @@ def audit_query(df, execute: bool = True) -> list[dict]:
     return flags
 
 
-def graded_and_bench_names() -> list[str]:
-    """The audited surface: graded window first, then bench extras."""
-    import bench
-
-    from rust_etl_spark.plans import catalog
-
-    names: list[str] = []
-    for name in [*catalog.GRADE_ORDER, *bench.HEADLINE, *bench.EXTENDED]:
-        if name not in names:
-            names.append(name)
-    return names
-
-
 def sweep(spark, sf_dir: str, names: list[str], execute: bool = True,
           verbose: bool = True) -> list[dict]:
     """Classify every query's fact broadcasts; one row per query.
@@ -189,6 +176,7 @@ def sweep(spark, sf_dir: str, names: list[str], execute: bool = True,
 
 
 def main() -> None:
+    import bench
     from rust_etl_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/repo/gen_sf10")
@@ -196,13 +184,7 @@ def main() -> None:
     spark = get_spark("misbroadcast-audit")
     spark.sparkContext.setLogLevel("ERROR")
 
-    import pandas as _pd
-
-    spark.createDataFrame(_pd.DataFrame({"k": range(64), "v": range(64)})) \
-        .groupBy("k").applyInPandas(lambda p: p, "k long, v long") \
-        .write.format("noop").mode("overwrite").save()
-
-    rows = sweep(spark, sf_dir, graded_and_bench_names())
+    rows = sweep(spark, sf_dir, bench.AUDITED)
 
     bad = [r for r in rows if r.get("raw_fact_broadcasts")]
     filtered = [r for r in rows if r.get("fact_broadcasts") and not r.get("raw_fact_broadcasts")]

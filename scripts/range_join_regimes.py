@@ -15,12 +15,13 @@ signup slice.
 
 This script runs the IDENTICAL dataflow (plans/events_queries.py::
 _range_join) under all three strategies — shipped shuffle_hash, the
-spill-safe merge fallback, and Catalyst's unhinted pick — recording
-min-of-3 wall (after an untimed warm run per regime), per-run shuffle
-bytes via the Spark UI REST stage metrics, and the executedPlan join
-inventory. It also quantifies the fan-out bound itself: max and p99
-events per (user_id, day-bucket) key vs per user lifetime — the margin
-that keeps both shuffle regimes skew-safe.
+spill-safe merge fallback, and Catalyst's unhinted pick — recording,
+through ``bench.measure`` with the Spark UI off, min-of-3 wall (after
+an untimed warm run per regime), the last run's shuffle and spill
+bytes, and the join inventory of its AQE-final plan. It also
+quantifies the fan-out bound itself: max and p99 events per (user_id,
+day-bucket) key vs per user lifetime — the margin that keeps both
+shuffle regimes skew-safe.
 
 Writes RANGE_JOIN_REGIMES.json; scripts/scaling_report.py renders it
 into SCALING.md. Run on a QUIET machine (CLAUDE.md contention note):
@@ -34,12 +35,9 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-UI_PORT = 4048
 N_RUNS = 3
 REGIMES = [
     ("shipped_shuffle_hash", "shuffle_hash"),
@@ -48,69 +46,30 @@ REGIMES = [
 ]
 
 
-def _stages(app_id: str) -> list[dict]:
-    url = f"http://localhost:{UI_PORT}/api/v1/applications/{app_id}/stages"
-    return json.load(urllib.request.urlopen(url))
+def _measure(spark, fn, sf_dir: str, hint) -> dict:
+    """min-of-N wall + last-run shuffle/spill + final-plan joins."""
+    import bench
 
-
-def _measure(spark, app_id: str, fn, sf_dir: str, hint, seen: set[int]) -> dict:
-    """min-of-N wall + last-run stage metrics + final executed plan."""
     # one UNTIMED warm run per regime: regimes share a JVM and run
     # sequentially, so without it the first regime pays scan-codegen
     # JIT the later ones inherit (first measurement: walls trending
     # 11.9 -> 6.5 -> 6.0 within a regime — warm-up, not variance)
     fn(spark, sf_dir, hint=hint).write.format("noop").mode("overwrite").save()
-    seen.update(s["stageId"] for s in _stages(app_id))
-    walls, per_run = [], []
-    plan = ""
-    for _ in range(N_RUNS):
-        df = fn(spark, sf_dir, hint=hint)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        walls.append(time.perf_counter() - t0)
-        new = [s for s in _stages(app_id) if s["stageId"] not in seen]
-        seen.update(s["stageId"] for s in new)
-        per_run.append(
-            {
-                "shuffle_write_mb": round(
-                    sum(s.get("shuffleWriteBytes", 0) for s in new) / 1e6, 3
-                ),
-                "shuffle_read_mb": round(
-                    sum(s.get("shuffleReadBytes", 0) for s in new) / 1e6, 3
-                ),
-                "spill_mb": round(
-                    sum(
-                        s.get("memoryBytesSpilled", 0) + s.get("diskBytesSpilled", 0)
-                        for s in new
-                    )
-                    / 1e6,
-                    3,
-                ),
-            }
-        )
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    lines = plan.splitlines()
-    join_lines = [
-        l.strip()
-        for l in lines
-        if ("Join" in l) and ("Exchange" not in l) and ("BroadcastExchange" not in l)
-    ]
-    key_joins = [l for l in join_lines if "Join [" in l]
+    m = bench.measure(spark, lambda: fn(spark, sf_dir, hint=hint), N_RUNS)
+    lines = m["plan"].splitlines()
+    key_joins = [l for l in lines if "Join [" in l and "Exchange" not in l]
     return {
-        "walls_sec": [round(w, 3) for w in walls],
-        "wall_min_sec": round(min(walls), 3),
+        "walls_sec": [round(w, 3) for w in m["walls"]],
+        "wall_min_sec": round(min(m["walls"]), 3),
         # shuffle is plan-determined: every run re-shuffles (noop sink,
-        # no caching), so report the per-run figure, not the sum
-        "shuffle_write_mb": per_run[-1]["shuffle_write_mb"],
-        "shuffle_read_mb": per_run[-1]["shuffle_read_mb"],
-        "spill_mb": max(r["spill_mb"] for r in per_run),
+        # no caching), so report the last run's figure, not the sum
+        "shuffle_write_mb": round(m["shuffle_write_bytes"] / 1e6, 3),
+        "shuffle_read_mb": round(m["shuffle_read_bytes"] / 1e6, 3),
+        "spill_mb": round(m["spill_bytes"] / 1e6, 3),
         "bhj": sum("BroadcastHashJoin" in l for l in lines),
         "shj": sum("ShuffledHashJoin" in l for l in lines),
         "smj": sum("SortMergeJoin" in l for l in lines),
-        "exchanges": sum(
-            ("Exchange hashpartitioning" in l) or ("Exchange rangepartitioning" in l)
-            for l in lines
-        ),
+        "exchanges": bench.shuffle_exchanges(m["plan"]),
         "join_node": key_joins[0][:160] if key_joins else "",
         "join_keys_have_user_and_bucket": bool(key_joins)
         and all("user_id" in l and "bkt" in l for l in key_joins),
@@ -158,16 +117,8 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/repo/gen_sf10")
     tag = os.path.basename(sf_dir.rstrip("/"))
-    spark = get_spark(
-        "range-join-regimes",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.port": str(UI_PORT),
-            "spark.ui.retainedStages": "8000",
-        },
-    )
+    spark = get_spark("range-join-regimes")
     spark.sparkContext.setLogLevel("ERROR")
-    app_id = spark.sparkContext.applicationId
 
     # warm the parquet footer/file-index caches once so regime 1
     # doesn't pay cold I/O the later regimes skip
@@ -175,11 +126,10 @@ def main() -> None:
 
     load_table(spark, sf_dir, "events").count()
 
-    seen: set[int] = set()
     regimes = []
     for name, hint in REGIMES:
         print(f"regime {name} (hint={hint})", flush=True)
-        r = _measure(spark, app_id, _range_join, sf_dir, hint, seen)
+        r = _measure(spark, _range_join, sf_dir, hint)
         r["regime"] = name
         r["hint"] = hint
         regimes.append(r)
@@ -192,6 +142,9 @@ def main() -> None:
         "metric": "events_range_join_regimes",
         "tier": tag,
         "n_runs": N_RUNS,
+        "cpus": spark.sparkContext.defaultParallelism,
+        # join and exchange counts read the AQE-final plan
+        "plan_sections": "final",
         "calibration_sec": bench._calibration(),
         "regimes": regimes,
         "fanout": fanout,

@@ -1,19 +1,20 @@
 """Per-query shuffle/spill audit — measure, don't guess.
 
 Runs every graded-window query PLUS the bench HEADLINE and EXTENDED
-sets (the heaviest queries live in EXTENDED: ngram/containment dedup,
-corpus curation, PQ search) end-to-end (noop sink) on local[32] and
-attributes Spark stage metrics (input bytes, shuffle read/write bytes,
-memory/disk spill, task count) to each query via the UI REST API.
+sets (``bench.AUDITED``; the heaviest queries live in EXTENDED:
+ngram/containment dedup, corpus curation, PQ search) end-to-end (noop
+sink) once each through ``bench.measure``, which reads the query's
+stage counters from the session's status stores with the Spark UI off.
+``stages`` counts every stage of the query's jobs, skipped ones
+included (the count the earlier UI REST scrape recorded, kept so
+cross-round counter comparisons stay like for like); tasks, shuffle
+read/write and spill come from the stages that ran.
 
 Writes SCALE_AUDIT.md (or SCALE_AUDIT_<tag>.md for a non-default SF
-tier): the evidence that the plans the engine claims are shuffle-lean
-actually are, and that nothing spills at the test scale. Queries whose
-shuffle write exceeds 2x their reported scan input (and 1 MB absolute)
-are flagged in the header as a SCREENING heuristic — stage-level
-inputBytes under-reports vectorized parquet scans, so a flag means
-"look at the plan", not "guilty"; the graded signal is the cross-tier
-shuffle RATIO in SCALING.md (flat ratio == linear shuffle growth).
+tier) plus the JSON record: the evidence that the plans the engine
+claims are shuffle-lean actually are, and that nothing spills at the
+test scale. The graded scale signal is the cross-tier shuffle RATIO in
+SCALING.md (flat ratio == linear shuffle growth).
 
 Run:  python scripts/scale_audit.py   (~6 min)
       SPARK_GRAFT_SF_DIR=/root/repo/gen_sf1 python scripts/scale_audit.py
@@ -24,38 +25,14 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-UI_PORT = 4047
-
-
-def _stages(app_id: str) -> list[dict]:
-    url = f"http://localhost:{UI_PORT}/api/v1/applications/{app_id}/stages"
-    return json.load(urllib.request.urlopen(url))
-
-
-def audit_names() -> list[str]:
-    """Graded window + bench headline + bench extended, order-preserving.
-    SPARK_GRAFT_BENCH_HEADLINE_ONLY restricts to the headline set (the
-    very large tiers, matching bench.py's flag)."""
-    import bench
-
-    from rust_etl_spark.plans import catalog
-
-    if os.environ.get("SPARK_GRAFT_BENCH_HEADLINE_ONLY"):
-        return list(bench.HEADLINE)
-    names: list[str] = []
-    for name in [*catalog.GRADE_ORDER, *bench.HEADLINE, *bench.EXTENDED]:
-        if name not in names:
-            names.append(name)
-    return names
-
 
 def main() -> None:
+    import bench
     from rust_etl_spark.plans import catalog
+    from rust_etl_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     tag = os.path.basename(sf_dir.rstrip("/"))
@@ -63,20 +40,10 @@ def main() -> None:
     # the ENGINE session (same broadcast threshold / AQE / split tuning
     # as bench.py — an earlier audit built its own ad-hoc session whose
     # 10 MB default broadcast threshold silently flipped the sf1 joins
-    # to sort-merge, inflating "measured" shuffle 50x vs the bench) plus
-    # the UI REST endpoint the stage-metric scrape needs.
-    from rust_etl_spark.session import get_spark
-
-    spark = get_spark(
-        "scale-audit",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.port": str(UI_PORT),
-            "spark.ui.retainedStages": "8000",
-        },
-    )
+    # to sort-merge, inflating "measured" shuffle 50x vs the bench)
+    spark = get_spark("scale-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    app_id = spark.sparkContext.applicationId
+    cpus = spark.sparkContext.defaultParallelism
 
     # Warm the Python/Arrow worker pool before any timed query: the
     # audit is single-run (unlike bench's min-of-3), and the first
@@ -90,90 +57,63 @@ def main() -> None:
         .groupBy("k").applyInPandas(lambda p: p, "k long, v long") \
         .write.format("noop").mode("overwrite").save()
 
-    names = audit_names()
+    names = bench.HEADLINE if os.environ.get("SPARK_GRAFT_BENCH_HEADLINE_ONLY") else bench.AUDITED
     rows = []
-    seen: set[int] = set()
     for name in names:
         q = catalog.get(name)
-        t0 = time.perf_counter()
-        q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
-        new = [s for s in _stages(app_id) if s["stageId"] not in seen]
-        seen.update(s["stageId"] for s in new)
+        m = bench.measure(spark, lambda: q.fn(spark, sf_dir), 1)
         rows.append(
             {
                 "query": name,
-                "wall_s": round(wall, 2),
-                "stages": len(new),
-                "tasks": sum(s.get("numCompleteTasks", 0) for s in new),
-                "input_mb": round(sum(s.get("inputBytes", 0) for s in new) / 1e6, 3),
-                "shuffle_write_mb": round(
-                    sum(s.get("shuffleWriteBytes", 0) for s in new) / 1e6, 3
-                ),
-                "shuffle_read_mb": round(
-                    sum(s.get("shuffleReadBytes", 0) for s in new) / 1e6, 3
-                ),
-                "spill_mb": round(
-                    sum(
-                        s.get("memoryBytesSpilled", 0) + s.get("diskBytesSpilled", 0)
-                        for s in new
-                    )
-                    / 1e6,
-                    3,
-                ),
+                "wall_s": round(m["walls"][0], 2),
+                "stages": m["listed_stages"],
+                "tasks": int(m["tasks"]),
+                "shuffle_write_mb": round(m["shuffle_write_bytes"] / 1e6, 3),
+                "shuffle_read_mb": round(m["shuffle_read_bytes"] / 1e6, 3),
+                "spill_mb": round(m["spill_bytes"] / 1e6, 3),
             }
         )
-        print(f"{name:32s} {wall:6.2f}s  in={rows[-1]['input_mb']:8.3f}MB "
-              f"shufW={rows[-1]['shuffle_write_mb']:8.3f}MB "
-              f"spill={rows[-1]['spill_mb']}MB", flush=True)
+        r = rows[-1]
+        print(f"{name:32s} {r['wall_s']:6.2f}s  shufW={r['shuffle_write_mb']:8.3f}MB "
+              f"spill={r['spill_mb']}MB", flush=True)
 
     spilled = [r for r in rows if r["spill_mb"] > 0]
-    heavy = [
-        r
-        for r in rows
-        if r["shuffle_write_mb"] > 1.0
-        and r["shuffle_write_mb"] > 2.0 * max(r["input_mb"], 0.001)
-    ]
     total_shuffle = round(sum(r["shuffle_write_mb"] for r in rows), 1)
     graded = set(catalog.GRADE_ORDER)
     out = [
         f"# Scale audit — per-query shuffle & spill at {tag}",
         "",
-        "Generated by `python scripts/scale_audit.py` (Spark UI REST stage",
-        "metrics, graded window + bench HEADLINE + EXTENDED, noop sink,",
-        "local[32]). Shuffle volume is the scale-limiting currency at",
-        "100 TB: a query whose shuffle write is a small fraction of its",
-        "input survives the scale-up; spill at the test scale would mean",
-        "executor memory pressure 1000x sooner. `in window` marks the",
-        "driver-graded queries.",
+        "Generated by `python scripts/scale_audit.py` (stage counters read",
+        "in-process by `bench.measure`, graded window + bench HEADLINE +",
+        f"EXTENDED, noop sink, local[{cpus}]). Shuffle volume is the",
+        "scale-limiting currency at 100 TB: a query whose shuffle write is",
+        "a small fraction of its input survives the scale-up; spill at the",
+        "test scale would mean executor memory pressure 1000x sooner.",
+        "`graded` marks the driver-graded queries.",
         "",
         f"- queries audited: **{len(rows)}**"
         f" ({len(graded)} graded + {len(rows) - len(graded)} bench-only)",
         f"- total shuffle write: **{total_shuffle} MB**",
         f"- queries that spilled: **{len(spilled)}**"
         + ("" if not spilled else " — " + ", ".join(r["query"] for r in spilled)),
-        f"- shuffle > 2x reported input (>1 MB; screening heuristic — "
-        f"see SCALING.md for cross-tier ratios): **{len(heavy)}**"
-        + ("" if not heavy else " — " + ", ".join(r["query"] for r in heavy)),
         "",
-        "| query | graded | wall s | stages | tasks | input MB | shuffle write MB | shuffle read MB | spill MB |",
-        "|---|---|---|---|---|---|---|---|---|",
+        "| query | graded | wall s | stages | tasks | shuffle write MB | shuffle read MB | spill MB |",
+        "|---|---|---|---|---|---|---|---|",
     ]
     for r in rows:
         out.append(
             f"| {r['query']} | {'y' if r['query'] in graded else ''} "
-            f"| {r['wall_s']} | {r['stages']} | {r['tasks']} | {r['input_mb']} "
+            f"| {r['wall_s']} | {r['stages']} | {r['tasks']} "
             f"| {r['shuffle_write_mb']} | {r['shuffle_read_mb']} | {r['spill_mb']} |"
         )
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(root, out_name), "w") as f:
         f.write("\n".join(out) + "\n")
     with open(os.path.join(root, out_name.replace(".md", ".json")), "w") as f:
-        json.dump({"tag": tag, "rows": rows}, f, indent=1)
+        json.dump({"tag": tag, "cpus": cpus, "rows": rows}, f, indent=1)
         f.write("\n")
     print(f"\nwrote {out_name}  ({len(rows)} queries, "
-          f"{total_shuffle} MB total shuffle, {len(spilled)} spilled, "
-          f"{len(heavy)} heavy)")
+          f"{total_shuffle} MB total shuffle, {len(spilled)} spilled)")
 
 
 if __name__ == "__main__":

@@ -445,6 +445,14 @@ def _bucketed_section() -> list[str]:
     families = bb.get("families") or [
         {"family": "orderkey", "tiers": bb.get("tiers", [])}
     ]
+    both = [fam["family"] for fam in families if fam.get("plan_sections") != "final"]
+    if both:
+        lines[2:2] = [
+            f"Exchange counts of the {', '.join(both)} rows cover both the "
+            "Final and the Initial section of each AQE plan string; later "
+            "runs count the final plan only.",
+            "",
+        ]
     for fam in families:
         for t in fam["tiers"]:
             for q in t["queries"]:
@@ -572,6 +580,13 @@ def _range_join_regimes_section() -> list[str]:
         "| regime | hint | wall min s | shuffle write MB | join | exchanges | spill MB |",
         "|---|---|---|---|---|---|---|",
     ]
+    if rj.get("plan_sections") != "final":
+        lines[2:2] = [
+            "Join and exchange counts in this record come from the pre-AQE "
+            "plan, not the final plan the measured run executed; later "
+            "runs count the AQE-final plan.",
+            "",
+        ]
     for r in rj["regimes"]:
         join = (
             f"BHJ x{r['bhj']}" if r["bhj"]

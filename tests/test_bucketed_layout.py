@@ -27,6 +27,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+import bench
 from rust_etl_spark.plans import catalog
 from rust_etl_spark.sinks import write_bucketed_fact_layout
 from rust_etl_spark.sources import (
@@ -45,7 +46,8 @@ def _final_plan(df) -> str:
 
 
 def _exchanges(plan: str) -> int:
-    return len(re.findall(r"\bExchange (?:hash|range)partitioning", plan))
+    # the Final section only: an AQE plan string also prints its Initial plan
+    return bench.shuffle_exchanges(plan)
 
 
 @pytest.fixture()

@@ -35,7 +35,8 @@ sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
 )
 
-from misbroadcast_audit import graded_and_bench_names, sweep  # noqa: E402
+import bench  # noqa: E402
+from misbroadcast_audit import sweep  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
@@ -106,7 +107,7 @@ _ALL_OK = set(RAW_OK_AT_FIXTURE_SCALE) | set(REDUCED_OK)
 
 
 def test_no_unadjudicated_fact_broadcasts(spark):
-    rows = sweep(spark, SF, graded_and_bench_names(), execute=False, verbose=False)
+    rows = sweep(spark, SF, bench.AUDITED, execute=False, verbose=False)
     errors = [r for r in rows if "error" in r]
     assert not errors, errors
 
